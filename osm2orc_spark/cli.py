@@ -58,12 +58,7 @@ def _write_single_orc_file(df, out: str, bounds) -> None:
 
     stage = tempfile.mkdtemp(suffix=".orcstage")
     try:
-        write_orc(
-            df.coalesce(1),
-            stage,
-            bounds=bounds,
-            sort_type_then_id="type" in df.columns,
-        )
+        write_orc(df.coalesce(1), stage, bounds=bounds)
         part = next(
             f
             for f in sorted(os.listdir(stage))
@@ -152,11 +147,7 @@ def main(argv: list[str] | None = None) -> int:
             bounds = None if changesets else read_pbf_bounds(inp)
             _write_single_orc_file(df, out, bounds)
         elif changesets:
-            write_orc(
-                read_changesets(spark, inp, include_discussion=discussion),
-                out,
-                sort_type_then_id=False,
-            )
+            write_orc(read_changesets(spark, inp, include_discussion=discussion), out)
         else:
             write_orc(read_pbf(spark, inp), out, bounds=read_pbf_bounds(inp))
     finally:

@@ -1,21 +1,18 @@
-"""ORC sink with the reference's writer options and user metadata.
+"""ORC sink: the one module that decides how OSM ORC is written and stamped.
 
 Reference behavior reproduced:
-- ORC output with block padding disabled (standalone/OsmPbf2Orc.java:85,
-  OsmChangesetXml2Orc.java:71) -> write option orc.block.padding=false.
-- Bloom filter on tags evaluated-but-disabled (OsmPbf2Orc.java:86,
-  osmosis/OrcWriter.java:251) -> exposed as an opt-in flag, off by
-  default like the reference shipped.
+- Every file goes through one writer with block padding disabled
+  (standalone/OsmPbf2Orc.java:85, OsmChangesetXml2Orc.java:71) and zlib,
+  the orc-core default compression the reference shipped.
 - ORC user metadata 'osm.schema.version=0.6' (OsmPbf2Orc.java:90) and
   'bounds' = "left, bottom, right, top" when the PBF header has a bbox
-  (OsmPbf2Orc.java:122-125). Spark's DataFrameWriter has no user-metadata
-  API, so after the distributed write a post-write step rewrites each
-  part file through Spark's bundled ``org.apache.orc`` Java writer
-  (py4j), stamping the SAME key/value user metadata the reference
-  emits — readable by any ``OrcFile.createReader`` / Athena-side
-  tooling, exactly like the reference's output. A sidecar
-  ``_osm_metadata.json`` is kept as a convenience for non-JVM readers;
-  ``read_metadata`` prefers the in-file metadata.
+  (OsmPbf2Orc.java:122-125), stored in the footer of every part file,
+  where ``OrcFile.createReader``, Athena and
+  ``pyarrow.orc.ORCFile(f).metadata`` read it.  Spark's DataFrameWriter
+  has no user-metadata API, so after the write ``embed_user_metadata``
+  appends the items to each part file's footer through the Hadoop
+  FileSystem; stores without truncate/append (S3A) get a JVM batch-copy
+  rewrite instead.
 
 Sorted layout: the reference left 'Sort.Type_then_ID' as commented-out
 intent (OsmPbf2Orc.java:93-94); sortWithinPartitions('type','id') is the
@@ -25,32 +22,13 @@ type/id predicates prune stripes at read time, with no global shuffle.
 
 from __future__ import annotations
 
-import json
-import os
-import re
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 OSM_SCHEMA_VERSION = "0.6"
-
-# URI scheme per RFC 3986 — "hdfs:/tmp/x" (single slash) is a legal
-# Hadoop URI, so scheme detection must not require "://" (r8 advice).
-_SCHEME_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*):")
-
-
-def _path_scheme(path: str) -> str | None:
-    m = _SCHEME_RE.match(path)
-    return m.group(1).lower() if m else None
-
-
-def _strip_file_scheme(path: str) -> str:
-    """file:///x | file:/x | /x -> /x (posix form)."""
-    if _path_scheme(path) == "file":
-        local = path.split(":", 1)[1]
-        return local[2:] if local.startswith("///") else local
-    return path
 
 
 def _parse_postscript(ps: bytes) -> tuple[int, int, tuple[int, int]]:
@@ -115,10 +93,9 @@ def _parse_postscript(ps: bytes) -> tuple[int, int, tuple[int, int]]:
 
 def _tail_appendix(ps: bytes, metadata: dict[str, str]) -> tuple[bytes, bytes]:
     """Build (footer appendix bytes, replacement postscript bytes) for a
-    metadata tail append.  Shared by the posix and Hadoop-FS paths, so
-    both produce byte-identical tails.  The new footerLength varint is
-    spliced at the ORIGINAL field-1 position — every other postscript
-    byte, including the trailing magic, is preserved in place."""
+    metadata tail append.  The new footerLength varint is spliced at the
+    ORIGINAL field-1 position — every other postscript byte, including
+    the trailing magic, is preserved in place."""
     from osm2orc_spark.sources.pbf_codec import _emit_bytes, _emit_varint
 
     footer_len, compression, f1_span = _parse_postscript(ps)
@@ -140,81 +117,36 @@ def _tail_appendix(ps: bytes, metadata: dict[str, str]) -> tuple[bytes, bytes]:
     return extra, new_ps
 
 
-def append_user_metadata_tail(file_path: str, metadata: dict[str, str]) -> None:
+def append_user_metadata_tail_fs(spark: SparkSession, file_path, metadata: dict[str, str]) -> None:
     """Stamp ORC user metadata into ONE part file by rewriting only the
-    file TAIL — O(footer bytes), not O(file): no row batch is ever
-    decoded or re-encoded.
+    file TAIL through the Hadoop ``FileSystem`` API — O(footer bytes),
+    not O(file): no row batch is ever decoded or re-encoded.
 
     Layout of an ORC file tail (ORC spec v1):
       [stripes...][stripe-stats "metadata"][footer][postscript][psLen:1B]
-    and two protobuf properties make a surgical append sound:
-
-    1. **Concatenation = field append.** A serialized protobuf message
-       followed by more serialized fields of the same message type
-       decodes as one message with those fields appended.  Footer's
-       ``metadata`` (field 5) is a repeated UserMetadataItem, so
-       appending encoded items to the footer byte stream ADDS metadata
-       entries — no parse, so unknown/future Footer fields are preserved
-       byte-for-byte (the py4j rewrite path cannot make that guarantee
-       for data: it re-encodes every batch).
-    2. **Last-value-wins.** PostScript's ``footerLength`` (field 1) is a
-       non-repeated scalar, so appending a new footerLength varint at
-       the END of the postscript overrides the stale one while leaving
-       every other postscript byte untouched.
+    A serialized protobuf message followed by more serialized fields of
+    the same message type decodes as one message with those fields
+    appended.  Footer's ``metadata`` (field 5) is a repeated
+    UserMetadataItem, so appending encoded items to the footer byte
+    stream ADDS metadata entries without parsing the footer: unknown or
+    future Footer fields are preserved byte-for-byte.  The postscript's
+    ``footerLength`` is then replaced in place, keeping the trailing
+    'ORC' magic last, as strict readers require.
 
     Compressed footers (ZLIB/SNAPPY/ZSTD postscript kinds) are streams of
     3-byte-header chunks; a chunk with the low header bit set is stored
     "original" (uncompressed), and mixing original chunks into a
     compressed stream is spec-valid — the appendix rides in one original
-    chunk, so no codec is even needed.
+    chunk, so no codec is needed.
 
-    Local/posix paths only (opens r+b and truncates); the distributed
-    100 TB path runs this same function as one Spark task per file via
-    ``embed_user_metadata(..., distributed=True)``.  Reference parity:
-    the resulting reader view (``OrcFile.createReader .getMetadataKeys``)
-    is identical to the reference's writer-time ``addUserMetadata``
-    (OsmPbf2Orc.java:90,122-125) — asserted against the JVM reader AND
-    the batch-copy rewrite in tests/test_osm_ingest.py.
-
-    The replacement footerLength is SPLICED at the original field-1
-    position (r8 advice): the postscript keeps its trailing 'ORC' magic,
-    so strict readers that require magic-last accept stamped files
-    without the ORC-0.11 header-sniff fallback.
-    """
-    with open(file_path, "r+b") as f:
-        f.seek(0, 2)
-        size = f.tell()
-        f.seek(size - 1)
-        ps_len = f.read(1)[0]
-        f.seek(size - 1 - ps_len)
-        ps = f.read(ps_len)
-        extra, new_ps = _tail_appendix(ps, metadata)
-        f.seek(size - 1 - ps_len)  # end of the current footer
-        f.write(extra + new_ps + bytes([len(new_ps)]))
-        f.truncate()
-    # Hadoop's ChecksumFileSystem keeps a ".<name>.crc" sidecar for local
-    # files; the in-place tail rewrite invalidates it and the JVM reader
-    # would throw ChecksumException.  Dropping the sidecar is safe (crc
-    # verification is simply skipped when absent) and object stores have
-    # no sidecars at all.
-    crc = os.path.join(
-        os.path.dirname(file_path), f".{os.path.basename(file_path)}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
-
-
-def append_user_metadata_tail_fs(spark: SparkSession, file_path, metadata: dict[str, str]) -> None:
-    """The same O(footer-bytes) metadata tail append, through the Hadoop
-    ``FileSystem`` API (r8 verdict #5): ranged-read the tail, rebuild it
-    with :func:`_tail_appendix` (byte-identical to the posix path by
-    construction — shared helper), then ``truncate`` + ``append`` the
-    last few hundred bytes.  Works on any FS implementing
+    The file is ranged-read at its tail, then ``truncate`` + ``append``
+    rewrite the last few hundred bytes.  Works on any FS implementing
     truncate/append (HDFS, raw local, MapR, Ozone); filesystems without
-    them (S3A) raise ``UnsupportedOperationException`` and the caller
-    falls back to the batch-copy rewrite.  At planet scale (10^4-10^5
-    part files on a remote FS) this is seconds of tail I/O instead of
-    re-writing the dataset.
+    them (S3A) raise ``UnsupportedOperationException``.  Reference
+    parity: the resulting reader view (``OrcFile.createReader
+    .getMetadataKeys``) is identical to the reference's writer-time
+    ``addUserMetadata`` (OsmPbf2Orc.java:90,122-125) — asserted against
+    the JVM reader AND the batch-copy rewrite in tests/test_osm_ingest.py.
 
     ``file_path`` may be a string URI or a resolved ``hadoop.fs.Path``.
     """
@@ -222,11 +154,11 @@ def append_user_metadata_tail_fs(spark: SparkSession, file_path, metadata: dict[
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(file_path) if isinstance(file_path, str) else file_path
     fs = p.getFileSystem(conf)
-    # ChecksumFileSystem (scheme "file") neither appends nor keeps crc
-    # sidecars valid under tail rewrites — unwrap to the raw FS (object
-    # stores / HDFS have no checksum wrapper and no getRaw method) and
-    # drop the now-stale sidecar (same invalidation as the posix path;
-    # readers simply skip crc verification when it's absent).
+    # ChecksumFileSystem (scheme "file") neither appends nor keeps its
+    # ".<name>.crc" sidecars valid under tail rewrites — unwrap to the raw
+    # FS (object stores / HDFS have no checksum wrapper and no getRaw
+    # method) and drop the now-stale sidecar; readers simply skip crc
+    # verification when it's absent.
     try:
         crc = fs.getChecksumFile(p)
         fs = fs.getRawFileSystem()
@@ -265,160 +197,91 @@ def append_user_metadata_tail_fs(spark: SparkSession, file_path, metadata: dict[
         out.close()
 
 
-def embed_user_metadata(
-    spark: SparkSession,
-    path: str,
-    metadata: dict[str, str],
-    distributed: bool = False,
-) -> None:
-    """Stamp ORC *user metadata* into every ``*.orc`` part file under
-    ``path``, matching the reference's ``writer.addUserMetadata`` calls
-    (OsmPbf2Orc.java:90,122-125).
-
-    Local paths take the O(footer-bytes) surgical tail append
-    (``append_user_metadata_tail`` — no row data touched); with
-    ``distributed=True`` the appends fan out as Spark tasks (pure-Python
-    closure, no py4j) for outputs whose part-file count makes even a
-    ~1 ms/file driver loop sequential-FS-bound — byte-identical results,
-    asserted in tests.  Remote filesystems fall back to a full rewrite
-    through Spark's bundled ``org.apache.orc`` Java API: stream row
-    batches reader->writer (schema and compression preserved), re-add
-    any existing user metadata, add ours, then atomically swap via the
-    Hadoop FileSystem.
-
-    Scale note (r8: now measured AND parallelized): the e2e_x10 bench
-    attribution showed this rewrite — not the distributed ORC encode —
-    dominating the PBF->ORC wall (~25s of a ~30s 9M-entity transcode
-    when run as a sequential per-file loop; the distributed write itself
-    is ~2s). Files are independent, so the rewrite now fans out over a
-    driver-side thread pool: py4j gives each Python thread its own
-    gateway connection, and the actual read/encode/write work happens in
-    JVM threads that run concurrently (the GIL only gates the cheap
-    proxy calls). One py4j call per 64k-row batch keeps gateway
-    round-trips negligible. For a 100 TB output the same loop can run as
-    one Spark task per file via a JVM-side helper; the per-file
-    semantics certified here are identical.
-    """
-    # Fast path (r8): local/posix paths take the O(footer-bytes) tail
-    # append — no row batch is decoded or re-encoded, so stamping a part
-    # file costs ~1 ms regardless of its size (the batch-copy rewrite
-    # below is O(file): measured 9.3s even thread-pooled on the 9M-entity
-    # x10 twin, vs ~0 for the tail path).  Remote filesystems first try
-    # the SAME tail append through the Hadoop FS truncate/append API
-    # (r8 verdict #5 — HDFS-class systems); only filesystems without
-    # truncate/append (S3A) fall back to the JVM batch-copy rewrite.
-    # Scheme detection is RFC-3986 (r8 advice): "hdfs:/tmp/x" is remote.
-    scheme = _path_scheme(path)
-    if scheme is None or scheme == "file":
-        local = _strip_file_scheme(path)
-        parts_local = [
-            os.path.join(local, name)
-            for name in sorted(os.listdir(local))
-            if name.endswith(".orc") and not name.startswith((".", "_"))
-        ]
-        if distributed and len(parts_local) > 1:
-            # One Spark task per slice of part files: the append is pure
-            # Python (no py4j), so it runs on executors as-is.  Requires
-            # the output paths to be visible from every executor (posix-
-            # mounted / shared storage) — the deployment where a 100 TB
-            # output's >10^4 part files make even a 1 ms/file driver loop
-            # plus its sequential FS round-trips worth fanning out.
-            # Determinism: each file is touched by exactly one task, and
-            # the append bytes depend only on (file tail, metadata) —
-            # asserted byte-identical to the driver loop in tests.
-            meta = dict(metadata)
-            sc = spark.sparkContext
-            n_slices = max(1, min(len(parts_local), sc.defaultParallelism))
-            sc.parallelize(parts_local, n_slices).foreachPartition(
-                lambda paths: [
-                    append_user_metadata_tail(p, meta) for p in paths
-                ]
-            )
-        else:
-            for p in parts_local:
-                append_user_metadata_tail(p, metadata)
-        return
+def _rewrite_with_metadata(spark: SparkSession, p, metadata: dict[str, str]) -> None:
+    """O(file) fallback for stores without truncate/append: stream the
+    row batches of part file ``p`` through Spark's bundled
+    ``org.apache.orc`` writer (schema and compression preserved), re-add
+    any existing user metadata, add ``metadata``, then swap the copy in
+    through the Hadoop FileSystem."""
     jvm = spark._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
     OrcFile = jvm.org.apache.orc.OrcFile
-    jdir = HPath(path)
-    fs = jdir.getFileSystem(conf)
-    parts = [
+    fs = p.getFileSystem(conf)
+    reader = OrcFile.createReader(p, OrcFile.readerOptions(conf))
+    tmp = jvm.org.apache.hadoop.fs.Path(p.getParent(), f".{p.getName()}.meta.tmp")
+    wopts = (
+        OrcFile.writerOptions(conf)
+        .setSchema(reader.getSchema())
+        .compress(reader.getCompressionKind())
+        .blockPadding(False)
+        .overwrite(True)
+    )
+    writer = OrcFile.createWriter(tmp, wopts)
+    rows = reader.rows()
+    # 64k-row batches: the copy loop crosses py4j twice per batch, so
+    # the default 1024-row batch paid ~350 gateway round-trips per
+    # bench file set — measured 1.07s of the warm e2e wall; 64k cuts
+    # the crossings ~64x (JVM-side memory: one batch per column set)
+    batch = reader.getSchema().createRowBatch(65536)
+    while rows.nextBatch(batch):
+        writer.addRowBatch(batch)
+    rows.close()
+    for k in reader.getMetadataKeys():
+        writer.addUserMetadata(k, reader.getMetadataValue(k))
+    for k, v in metadata.items():
+        writer.addUserMetadata(
+            k, jvm.java.nio.ByteBuffer.wrap(bytearray(v.encode("utf-8")))
+        )
+    writer.close()
+    reader.close()
+    fs.delete(p, False)
+    if not fs.rename(tmp, p):
+        raise IOError(f"rename {tmp} -> {p} failed")
+
+
+def _part_files(spark: SparkSession, path: str) -> list:
+    """The ``*.orc`` part files under ``path`` as ``hadoop.fs.Path``s,
+    resolved and listed through the Hadoop FileSystem the same way
+    Spark's writer resolves ``path`` (relative, ``file:``, ``hdfs:``,
+    ``s3a:`` alike)."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    jdir = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return [
         st.getPath()
-        for st in fs.listStatus(jdir)
+        for st in jdir.getFileSystem(conf).listStatus(jdir)
         if st.getPath().getName().endswith(".orc")
         and not st.getPath().getName().startswith((".", "_"))
     ]
 
-    # Probe truncate/append support on the FIRST part file: if the FS
-    # supports them (HDFS, Ozone, raw local) every file takes the
-    # O(footer) tail path; if not (S3A raises
-    # UnsupportedOperationException before touching data) everything
-    # takes the batch-copy rewrite — never a mixed, half-stamped state.
-    if parts:
-        try:
-            append_user_metadata_tail_fs(spark, parts[0], metadata)
-            rest = parts[1:]
-            if len(rest) > 1:
-                from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(min(len(rest), 16)) as ex:
-                    list(
-                        ex.map(
-                            lambda p: append_user_metadata_tail_fs(spark, p, metadata),
-                            rest,
-                        )
-                    )
-            else:
-                for p in rest:
-                    append_user_metadata_tail_fs(spark, p, metadata)
-            return
-        except Exception as e:  # py4j wraps UnsupportedOperationException
-            if "UnsupportedOperation" not in str(e):
-                raise
+def embed_user_metadata(spark: SparkSession, path: str, metadata: dict[str, str]) -> None:
+    """Stamp ORC *user metadata* into every ``*.orc`` part file under
+    ``path``, matching the reference's ``writer.addUserMetadata`` calls
+    (OsmPbf2Orc.java:90,122-125).  The footer is the only metadata store.
 
-    def _rewrite(p) -> None:
-        name = p.getName()
-        reader = OrcFile.createReader(p, OrcFile.readerOptions(conf))
-        tmp = HPath(p.getParent(), f".{name}.meta.tmp")
-        wopts = (
-            OrcFile.writerOptions(conf)
-            .setSchema(reader.getSchema())
-            .compress(reader.getCompressionKind())
-            .overwrite(True)
-        )
-        writer = OrcFile.createWriter(tmp, wopts)
-        rows = reader.rows()
-        # 64k-row batches: the copy loop crosses py4j twice per batch, so
-        # the default 1024-row batch paid ~350 gateway round-trips per
-        # bench file set — measured 1.07s of the warm e2e wall; 64k cuts
-        # the crossings ~64x (JVM-side memory: one batch per column set)
-        batch = reader.getSchema().createRowBatch(65536)
-        while rows.nextBatch(batch):
-            writer.addRowBatch(batch)
-        rows.close()
-        for k in reader.getMetadataKeys():
-            writer.addUserMetadata(k, reader.getMetadataValue(k))
-        for k, v in metadata.items():
-            writer.addUserMetadata(
-                k, jvm.java.nio.ByteBuffer.wrap(bytearray(v.encode("utf-8")))
-            )
-        writer.close()
-        reader.close()
-        fs.delete(p, False)
-        if not fs.rename(tmp, p):
-            raise IOError(f"rename {tmp} -> {p} failed")
-
-    if len(parts) <= 1:
-        for p in parts:
-            _rewrite(p)
+    Each part file takes the O(footer-bytes) tail append
+    (``append_user_metadata_tail_fs``).  The first file is a probe: a
+    filesystem without truncate/append (S3A raises
+    ``UnsupportedOperationException`` before touching data) sends every
+    file to the batch-copy rewrite instead — never a mixed, half-stamped
+    state.  Files are independent, so either path runs over one
+    driver-side thread pool: py4j gives each Python thread its own
+    gateway connection and the I/O happens in concurrent JVM threads.
+    """
+    parts = _part_files(spark, path)
+    if not parts:
         return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(min(len(parts), 16)) as ex:
+    stamp = append_user_metadata_tail_fs
+    try:
+        stamp(spark, parts[0], metadata)
+        parts = parts[1:]
+    except Exception as e:  # py4j wraps UnsupportedOperationException
+        if "UnsupportedOperation" not in str(e):
+            raise
+        stamp = _rewrite_with_metadata
+    with ThreadPoolExecutor(16) as ex:
         # list() propagates the first worker exception to the caller
-        list(ex.map(_rewrite, parts))
+        list(ex.map(lambda p: stamp(spark, p, metadata), parts))
 
 
 def read_user_metadata(spark: SparkSession, path: str) -> dict[str, str]:
@@ -426,16 +289,9 @@ def read_user_metadata(spark: SparkSession, path: str) -> dict[str, str]:
     API (the way Athena/orc-tools see it) from the first part file."""
     jvm = spark._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
     OrcFile = jvm.org.apache.orc.OrcFile
-    jdir = HPath(path)
-    fs = jdir.getFileSystem(conf)
     utf8 = jvm.java.nio.charset.StandardCharsets.UTF_8
-    for st in fs.listStatus(jdir):
-        p = st.getPath()
-        name = p.getName()
-        if not name.endswith(".orc") or name.startswith((".", "_")):
-            continue
+    for p in _part_files(spark, path)[:1]:
         reader = OrcFile.createReader(p, OrcFile.readerOptions(conf))
         try:
             return {
@@ -451,48 +307,30 @@ def write_orc(
     df: DataFrame,
     path: str,
     bounds: tuple[float, float, float, float] | None = None,
-    sort_type_then_id: bool = True,
-    bloom_filter_tags: bool = False,
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
     embed_metadata: bool = True,
-    compression: str = "zlib",
-    extra_options: dict[str, str] | None = None,
 ) -> None:
-    """Write an OSM DataFrame as ORC with reference-equivalent options.
-
-    ``compression`` defaults to zlib — the orc-core default the reference
-    shipped, kept for byte-comparable parity.  The r8
-    ``orc_e2e_x10_attribution`` micro measured zstd ~16% cheaper on the
-    9M-entity encode (5.0s zlib vs 4.2s zstd, sorted) with comparable
-    ratios; pass ``compression="zstd"`` when parity with the reference's
-    output files is not required.
+    """Write an OSM DataFrame as ORC with the reference's writer settings:
+    overwrite, block padding off, zlib (kept for byte-comparable parity
+    with the reference's output), rows sorted on (type, id) within each
+    part file when both columns exist, and the schema-version (+ bounds)
+    user metadata stamped into every footer.  ``embed_metadata=False``
+    skips the stamp so the encode and the stamp can be timed apart.
     """
-    out = df
-    if sort_type_then_id and {"type", "id"} <= set(df.columns):
-        out = out.sortWithinPartitions("type", "id")
-    writer = (
-        out.write.mode(mode)
+    if {"type", "id"} <= set(df.columns):
+        df = df.sortWithinPartitions("type", "id")
+    (
+        df.write.mode("overwrite")
         .format("orc")
         .option("orc.block.padding", "false")
-        .option("compression", compression)
+        .option("compression", "zlib")
+        .save(path)
     )
-    if bloom_filter_tags:
-        writer = writer.option("orc.bloom.filter.columns", "tags")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    for k, v in (extra_options or {}).items():
-        writer = writer.option(k, v)
-    writer.save(path)
-
-    metadata = {"osm.schema.version": OSM_SCHEMA_VERSION}
-    if bounds is not None:
-        # Reference format: "left, bottom, right, top" (OsmPbf2Orc.java:124).
-        metadata["bounds"] = ", ".join(str(v) for v in bounds)
     if embed_metadata:
+        metadata = {"osm.schema.version": OSM_SCHEMA_VERSION}
+        if bounds is not None:
+            # Reference format: "left, bottom, right, top" (OsmPbf2Orc.java:124).
+            metadata["bounds"] = ", ".join(str(v) for v in bounds)
         embed_user_metadata(df.sparkSession, path, metadata)
-    with open(os.path.join(path, "_osm_metadata.json"), "w") as f:
-        json.dump(metadata, f, indent=2, sort_keys=True)
 
 
 def write_partitioned(
@@ -523,20 +361,6 @@ def write_partitioned(
         .option("orc.block.padding", "false")
         .save(path)
     )
-
-
-def read_metadata(path: str, spark: SparkSession | None = None) -> dict:
-    """Read back user metadata written by write_orc: the real in-file ORC
-    metadata when a session is supplied, else the sidecar JSON."""
-    if spark is not None:
-        meta = read_user_metadata(spark, path)
-        if meta:
-            return meta
-    try:
-        with open(os.path.join(path, "_osm_metadata.json")) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

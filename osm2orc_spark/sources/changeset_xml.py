@@ -42,6 +42,7 @@ from osm2orc_spark.schemas import (
     CHANGESET_DISCUSSION_RAW_SCHEMA,
     CHANGESET_RAW_SCHEMA,
 )
+from osm2orc_spark.sinks.orc import write_orc
 
 
 class NotAChangesetFileError(ValueError):
@@ -223,15 +224,16 @@ def read_changesets_stream(
 
 
 def stream_changesets_to_orc(stream_df: DataFrame, out_path: str, checkpoint: str):
-    """foreachBatch ORC sink, exactly-once: each micro-batch lands in its
-    own ``_batch_id=N`` partition via DYNAMIC partition overwrite, so a
-    batch replayed after a failure-before-checkpoint overwrites its own
-    partition instead of appending duplicates — idempotent without any
-    side ledger (foreachBatch itself is only at-least-once; the write
-    must supply the idempotence). Same writer options as the batch CLI
-    (block padding off). Returns the StreamingQuery; callers stop it (or
-    processAllAvailable for bounded input). Readers drop the _batch_id
-    partition column (or keep it as ingestion lineage)."""
+    """foreachBatch ORC sink, exactly-once: each micro-batch overwrites
+    its own ``_batch_id=N`` partition directory, so a batch replayed
+    after a failure-before-checkpoint overwrites its own partition
+    instead of appending duplicates — idempotent without any side ledger
+    (foreachBatch itself is only at-least-once; the write must supply
+    the idempotence). Each batch goes through ``write_orc``, the same
+    writer and footer metadata as the batch CLI. Returns the
+    StreamingQuery; callers stop it (or processAllAvailable for bounded
+    input). Readers drop the _batch_id partition column (or keep it as
+    ingestion lineage)."""
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_batch_orc(batch_df, batch_id, out_path)
 
@@ -246,15 +248,7 @@ def write_batch_orc(batch_df: DataFrame, batch_id: int, out_path: str) -> None:
     """The idempotent per-batch write: replaying (batch_df, batch_id)
     rewrites the same ``_batch_id`` partition, leaving the table
     unchanged. Module-level so tests can replay a batch directly."""
-    (
-        batch_df.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .format("orc")
-        .option("orc.block.padding", "false")
-        .save(out_path)
-    )
+    write_orc(batch_df, f"{out_path}/_batch_id={batch_id}")
 
 
 def _typed(raw: DataFrame) -> DataFrame:

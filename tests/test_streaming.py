@@ -252,8 +252,12 @@ def test_cli_watch_once_drains_directory(spark, tmp_path):
     """--watch --once: the CLI's streaming mode drains the landing dir
     and exits; output equals the batch CLI on the same file. Driven
     in-process (the CLI builds its own session via get_spark, which
-    getOrCreate()-reuses the test session)."""
+    getOrCreate()-reuses the test session). Every part file is written
+    like the batch CLI's: zlib, with the schema version in its footer."""
+    import glob
     import shutil
+
+    import pyarrow.orc as po
 
     from osm2orc_spark.cli import main
 
@@ -265,6 +269,11 @@ def test_cli_watch_once_drains_directory(spark, tmp_path):
     got = spark.read.orc(out)
     assert got.count() == 1788
     assert "_batch_id" in got.columns
+    parts = glob.glob(out + "/_batch_id=*/*.orc")
+    assert parts
+    for f in parts:
+        assert po.ORCFile(f).metadata[b"osm.schema.version"] == b"0.6"
+        assert po.ORCFile(f).compression == "ZLIB"
 
 
 def test_user_totals_query_reduces_multi_batch_input(spark, sf_smoke, tmp_path):
