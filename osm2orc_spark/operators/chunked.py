@@ -10,7 +10,7 @@ r7 verdict ruled is NOT a semantic floor for sessionization.  These
 primitives generalize ``sessionize_events_chunked``'s cure (time-range
 chunking: ``chunk = ms DIV chunk_ms``, computable per-row with no
 window; chunk order == stream order, and equal-ts ties always share a
-chunk) to the three shapes the family needs.  Each is EXACT — output
+chunk) to the two shapes the family shares.  Each is EXACT — output
 provably identical to the unbounded-window spelling — because the
 stitch term is the value the in-chunk window would have carried across
 the seam:
@@ -19,13 +19,16 @@ the seam:
   carry-in equal to the previous nonempty chunk's LAST row (a lag over
   the per-chunk summary — bounded by time_span/chunk_ms rows per user,
   independent of event count).
-- ``chunked_running_sum``: running sum (unbounded preceding .. current
-  row).  In-chunk running sum + the sum of all prior chunks' totals
-  (a window over the bounded summary).
 - ``chunked_running_last``: last(col, ignorenulls) over the running
   frame.  In-chunk running last, coalesced with the nearest prior
   nonempty carry from the summary — correct mid-chunk too, because an
   in-chunk NULL means "nothing seen yet inside this chunk".
+
+Running sums and row numbers (the islands run id, the SCD2 global row
+number) use the same stitch — in-chunk running value + the prefix of
+prior chunks' totals over the bounded summary — fused into the callers'
+single chunk pass (queries/sequences.py ``_islands_chunked_core``,
+``_scd2_chunked_core``).
 
 Residual worst case (same as sessionize_events_chunked, documented
 there): a key whose rows all land in ONE chunk_ms window still
@@ -121,120 +124,6 @@ def chunked_prev(
             ),
         ).drop(f"_inprev_{c}", f"_carry_{c}")
     return out.drop("_ms", "_chunk", "_rn")
-
-
-def chunked_prev_and_rn(
-    df: DataFrame,
-    key_col: str,
-    value_cols: list[str],
-    order_cols: tuple = ("ts", "event_id"),
-    chunk_ms: int = DEFAULT_CHUNK_MS,
-    rn_col: str = "rn",
-) -> DataFrame:
-    """``chunked_prev`` + row_number in ONE pass: df + ``prev_<col>``
-    for each value col (== lag over the unbounded per-key window) AND
-    ``rn_col`` (== row_number over the same window) — one event-level
-    window pass, one bounded summary, one join, where composing the two
-    primitives would pay two of each (measured: the scd2 chunked core's
-    two-pass spelling held a 2.08x hot ratio at XL; the fusion is the
-    cure).  Ascending order only (row_number has no desc use here)."""
-    d = _with_chunk(df, order_cols[0], chunk_ms, False)
-    wl = W.partitionBy(key_col, "_chunk").orderBy(*_order(order_cols, False))
-    out = d.withColumn("_rn", F.row_number().over(wl))
-    for c in value_cols:
-        out = out.withColumn(f"_inprev_{c}", F.lag(c).over(wl))
-    ord_struct = F.struct(*[F.col(c) for c in order_cols])
-    aggs = [F.count(F.lit(1)).alias("_cnt")]
-    # value wrapped in a struct so a genuinely-NULL last value is still
-    # carried (max_by skips NULL values, never NULL structs)
-    aggs += [
-        F.max_by(F.struct(F.col(c)), ord_struct)[c].alias(f"_last_{c}")
-        for c in value_cols
-    ]
-    summ = d.groupBy(key_col, "_chunk").agg(*aggs)
-    wc = W.partitionBy(key_col).orderBy("_chunk")
-    sel = [
-        F.col(key_col),
-        F.col("_chunk"),
-        F.coalesce(
-            F.sum("_cnt").over(wc.rowsBetween(W.unboundedPreceding, -1)), F.lit(0)
-        ).alias("_off"),
-    ]
-    sel += [F.lag(f"_last_{c}").over(wc).alias(f"_carry_{c}") for c in value_cols]
-    summ = summ.select(*sel)
-    out = out.join(summ, [key_col, "_chunk"], "left")
-    for c in value_cols:
-        out = out.withColumn(
-            f"prev_{c}",
-            F.when(F.col("_rn") == 1, F.col(f"_carry_{c}")).otherwise(
-                F.col(f"_inprev_{c}")
-            ),
-        ).drop(f"_inprev_{c}", f"_carry_{c}")
-    return (
-        out.withColumn(rn_col, F.col("_off") + F.col("_rn"))
-        .drop("_ms", "_chunk", "_rn", "_off")
-    )
-
-
-def chunked_running_sum(
-    df: DataFrame,
-    key_col: str,
-    value_col: Column | str,
-    out_col: str,
-    order_cols: tuple = ("ts", "event_id"),
-    chunk_ms: int = DEFAULT_CHUNK_MS,
-) -> DataFrame:
-    """df + ``out_col`` == SUM(value) OVER (PARTITION BY key ORDER BY
-    order_cols ROWS UNBOUNDED PRECEDING) with every window bounded:
-    in-chunk running sum + the bounded-summary prefix of prior chunks'
-    totals.  NULL-exact: the sum runs over coalesce(value, 0) with a
-    running non-null count deciding NULL-vs-value, so all-NULL prefixes
-    return NULL exactly like the unbounded window (r8 advice fix;
-    test_chunked_running_sum_null_semantics)."""
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    d = _with_chunk(df.withColumn("_v", v), order_cols[0], chunk_ms, False)
-    wl = (
-        W.partitionBy(key_col, "_chunk")
-        .orderBy(*_order(order_cols, False))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    # Exact SUM-window NULL semantics (r8 advice): SUM ignores NULL
-    # values and returns NULL only while the ENTIRE prefix is NULL.  The
-    # naive "_run + _off" stitch breaks when a row's whole in-chunk
-    # prefix is NULL but prior chunks contributed values (NULL + off ->
-    # NULL, where the unbounded window returns off).  So the running sum
-    # runs over coalesce(_v, 0) and a running non-null COUNT (in-chunk +
-    # prior-chunk prefix) decides NULL-vs-value — identical to the
-    # unbounded spelling for every NULL pattern, including all-NULL
-    # prefixes (count 0 -> NULL).
-    local = d.withColumn(
-        "_run", F.sum(F.coalesce(F.col("_v"), F.lit(0))).over(wl)
-    ).withColumn("_nn", F.count("_v").over(wl))
-    summ = d.groupBy(key_col, "_chunk").agg(
-        F.sum(F.coalesce(F.col("_v"), F.lit(0))).alias("_tot"),
-        F.count("_v").alias("_cnt"),
-    )
-    wc = (
-        W.partitionBy(key_col)
-        .orderBy("_chunk")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    summ = summ.select(
-        key_col,
-        "_chunk",
-        F.coalesce(F.sum("_tot").over(wc), F.lit(0)).alias("_off"),
-        F.coalesce(F.sum("_cnt").over(wc), F.lit(0)).alias("_offnn"),
-    )
-    return (
-        local.join(summ, [key_col, "_chunk"], "left")
-        .withColumn(
-            out_col,
-            F.when(
-                F.col("_nn") + F.col("_offnn") > 0, F.col("_run") + F.col("_off")
-            ),
-        )
-        .drop("_ms", "_chunk", "_v", "_run", "_nn", "_off", "_offnn")
-    )
 
 
 def chunked_running_last(

@@ -221,10 +221,15 @@ def _distinct_pairs(cand: DataFrame) -> DataFrame:
     pair's duplicate match rows come from DIFFERENT join keys (different
     shingles / LSH bands), i.e. different upstream tasks — so both
     spellings shuffle ~all raw match rows once, and this one skips the
-    second full exchange of the distinct pairs.  Per-key skew bound is
-    unchanged: a hot doc_a concentrates its raw match rows (at most the
-    pair multiplicity x its distinct partners, multiplicity <= bands or
-    prefix overlaps) on the key that already owned its verify work."""
+    second full exchange of the distinct pairs.  Per-key skew is WORSE
+    than the old spelling's: its (doc_a, doc_b)-keyed exchange spread a
+    hot doc_a's raw rows across partitions and the doc_a repartition then
+    carried one row per distinct pair, whereas here every RAW match row
+    of a hot doc_a lands on the one task that owns its verify work before
+    the dedup — pair multiplicity x distinct partners, where multiplicity
+    is up to the band count (MinHash) or the shared prefix/shingle count
+    (ppjoin, dedup_ngram_jaccard: up to the shared-shingle count per
+    pair).  A corpus with a very hot doc_a pays those rows in one task."""
     return _distribute_pairs(cand).dropDuplicates(["doc_a", "doc_b"])
 
 
@@ -746,28 +751,16 @@ CC_COLLECT_MAX_EDGES = 1 << 20
     "bounded collect, eliminating the per-round job overhead that "
     "dominates small graphs; above the cap, iterative min-label "
     "propagation — each round is one join + one groupBy-min on the label "
-    "frame, lineage cut per round (localCheckpoint locally; pass "
-    "checkpoint='reliable' for a fault-tolerant checkpoint dir on "
-    "preemptible clusters), converging in O(component diameter) rounds. "
+    "frame, lineage cut per round (a reliable checkpoint when the "
+    "SparkContext has a checkpoint dir — set one on preemptible "
+    "clusters — localCheckpoint otherwise), converging in O(component "
+    "diameter) rounds. "
     "Both paths produce the identical min-label fixpoint "
     "(test-asserted); only bounded data (edge list under the cap, or the "
     "per-round convergence scalar) ever touches the driver.",
     tags=("dedup", "iterative"),
 )
-def dedup_components(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    checkpoint: str = "local",
-    collect_max_edges: int = CC_COLLECT_MAX_EDGES,
-) -> DataFrame:
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}")
-    if checkpoint == "reliable" and spark.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            "checkpoint='reliable' requires spark.sparkContext.setCheckpointDir "
-            "(an HDFS/S3 path on a real cluster) before calling dedup_components"
-        )
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Hold the upstream result object for the whole function: its shingle
     # cache is scoped to it (release_with) and must survive until the
     # propagation loop below has materialized the edge list.
@@ -797,7 +790,9 @@ def dedup_components(
     # graph. At or under the hard cap, one bounded collect + union-find
     # resolves the identical min-label fixpoint in O(E α(E)) driver time;
     # above it, the loop below scales to any edge count.
-    if n_edges <= collect_max_edges:
+    # (The cap is read at call time so tests and the XL harness can
+    # monkeypatch it to -1 and force the fixpoint.)
+    if n_edges <= CC_COLLECT_MAX_EDGES:
         from pyspark.sql import types as T
 
         parent: dict = {}
@@ -858,6 +853,7 @@ def dedup_components(
     # their own component once, after the fixpoint. (und holds both edge
     # directions, so doc_a alone covers every endpoint.)
     paired = und.select(F.col("doc_a").alias("doc_id")).distinct().persist()
+    reliable = spark.sparkContext.getCheckpointDir() is not None
     labels = paired.select("doc_id", F.col("doc_id").alias("component")).persist()
     prev_sum = None
     while True:
@@ -877,15 +873,16 @@ def dedup_components(
                 .groupBy("doc_id")
                 .agg(F.min("component").alias("component"))
             )
-        # Cut lineage and materialize the round: executor-local blocks for
-        # single-node runs, a reliable checkpoint dir for clusters where
-        # losing an executor must not kill the accumulated iterations.
+        # Cut lineage and materialize the round: the context's reliable
+        # checkpoint dir when one is set (clusters where losing an
+        # executor must not kill the accumulated iterations),
+        # executor-local blocks otherwise.
         # The checkpoint is LAZY and the convergence-sum collect is the
         # action that materializes it — one job per round instead of an
         # eager-checkpoint job followed by a separate aggregation job
         # (the per-round driver round trips are the fixed cost that
         # dominates this loop on shallow clusters).
-        if checkpoint == "reliable":
+        if reliable:
             new_labels = merged.checkpoint(eager=False)
         else:
             new_labels = merged.localCheckpoint(eager=False)
@@ -1192,7 +1189,6 @@ def simhash_near_dup_refined(
     spark: SparkSession,
     sf_dir: str,
     *,
-    bucket_cap: int = SIMHASH_BUCKET_CAP,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Scale path for ``simhash_near_dup`` — since r9 the registered
@@ -1267,7 +1263,7 @@ def simhash_near_dup_refined(
     hot = (
         chunks.groupBy("c", "cv")
         .agg(F.count(F.lit(1)).alias("n_bucket"))
-        .filter(F.col("n_bucket") > bucket_cap)
+        .filter(F.col("n_bucket") > SIMHASH_BUCKET_CAP)
         .select("c", "cv")
     )
     cold_keys = chunks.join(F.broadcast(hot), ["c", "cv"], "left_anti").select(
@@ -1542,7 +1538,8 @@ def _chunked_block_rn(
     per-chunk summary, bounded by the number of distinct prefixes per
     block, independent of block row count).  Identical to
     row_number() OVER (PARTITION BY blk ORDER BY order_cols) by the
-    same stitch argument as chunked_prev_and_rn; property-tested
+    same stitch argument as the global row number of
+    queries/sequences.py's ``_scd2_chunked_core``; property-tested
     against the window spelling on adversarial strings."""
     from pyspark.sql.window import Window as W
 

@@ -18,7 +18,8 @@ both hash-partitioned on the same key, so AQE reuses the exchange) plus
 one groupBy(dst) with map-side partial sums. At 100 TB the graph is the
 small side of the data (distinct trade pairs), iterations are fixed, and
 beyond ~10 rounds you'd checkpoint the rank lineage exactly as
-dedup_components does (reliable_checkpoint=True posture).
+dedup_components does (a reliable checkpoint when the SparkContext has a
+checkpoint dir, localCheckpoint otherwise).
 """
 
 from __future__ import annotations

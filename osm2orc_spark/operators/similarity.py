@@ -993,8 +993,8 @@ LSH_BUCKET_CAP = 256
 
 def _lsh_cosine_verify(sigs: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact-cosine verification of candidate pairs against the cached
-    quantized vectors — the shared tail of the registered and refined
-    near-dup spellings."""
+    quantized vectors — the shared tail of the 8-bit and refined
+    candidate branches."""
     ea = sigs.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"))
     eb = sigs.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"))
     # qa/qb are ALREADY quantized (the cached sigs.q column) — cosine
@@ -1011,11 +1011,46 @@ def _lsh_cosine_verify(sigs: DataFrame, cand: DataFrame) -> DataFrame:
 
 
 def _lsh_refined_candidates(sigs: DataFrame, bucket_cap: int) -> DataFrame:
-    """Adaptive-band-refinement candidate pairs: level-1 buckets over
-    ``bucket_cap`` extend their join key with the next signature chunk
-    (16-bit bands); cold buckets keep the registered 8-bit semantics via
-    a -1 sentinel.  See ``embedding_near_dup_lsh_refined`` for the full
-    argument + measurements."""
+    """Candidate pairs by ADAPTIVE BAND REFINEMENT — the scale path
+    ``embedding_near_dup_lsh`` takes when its max-bucket probe exceeds
+    ``bucket_cap``.
+
+    The 8-bit bands have only 2^8 values, so the bucket space saturates
+    at ~10^3 buckets per band and in-bucket pair counts grow
+    QUADRATICALLY once the corpus outgrows it — measured
+    (``lsh_bucket_saturation``): 800k vectors put 1.19 x 10^10 rows
+    through the candidate join (158,000x the sf0.1 count for 400x the
+    data); the unrefined plan did not finish a 590 s budget there.
+
+    Refinement keeps the candidate join bounded at ANY corpus size: a
+    level-1 bucket (c, cv) holding more than ``bucket_cap`` vectors
+    extends its join key with the NEXT signature chunk's value
+    (cv2 = chs[(c+1) mod RP_CHUNKS]) — those collisions become
+    16-bit-band collisions — while buckets under the cap keep the exact
+    8-bit semantics (their rows carry the sentinel cv2 = -1, which can
+    never equal a real chunk value on a refined row).  Output on any
+    corpus whose buckets are all under the cap is IDENTICAL to the
+    unrefined candidates (test-asserted at sf0.01 by forcing the probe;
+    recorded at sf0.1 too).
+
+    Measured at 800k vectors (``lsh_refined_xl`` /
+    ``lsh_refined_planted`` in SCALING_SKEW.jsonl): the refined join
+    moves 8.0 x 10^7 rows instead of 1.19 x 10^10 (148x; max refined
+    bucket 270), one pass 205 s on local[32] where the unrefined plan
+    did not finish.  The recall tradeoff is the standard LSH band-width
+    curve, quantified: 16-bit bands keep **65% of cos >= 0.9 pairs**
+    (2,500 planted companions, median quantized cos 0.94; theory p^16 at
+    p = 0.889 over 8 overlapping chunk-pair bands) and ~0.7% of
+    threshold-zone [0.4, 0.6) pairs (p^16 ~ 6e-4 at p = 0.63) — i.e.
+    refinement preserves the near-DUP contract and sheds the
+    threshold-zone tail.  Mid-cosine similarity at corpus scale is the
+    cluster-blocked family's job (dedup_semantic_kmeans,
+    embedding_prototype_prune), not a band-LSH sweep's.
+
+    An exact-duplicate class larger than the refined bucket is the
+    documented ``dedup_exact``-first contract, same as the dfcap
+    variant's hot-shingle posture.  For corpora another 10^3 beyond,
+    compose another chunk (cv3) — the same move, one more level."""
     # ch2: (vec_id, c, cv, cv2) — the level-2 value rides along from the
     # cached chs array (element_at is O(1) per exploded row).
     ch2 = sigs.select("vec_id", F.explode("chs").alias("ch"), "chs").select(
@@ -1049,60 +1084,6 @@ def _lsh_refined_candidates(sigs: DataFrame, bucket_cap: int) -> DataFrame:
         .select("vec_a", "vec_b")
         .distinct()
     )
-
-
-def embedding_near_dup_lsh_refined(
-    spark: SparkSession, sf_dir: str, *, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
-    """Scale path for ``embedding_near_dup_lsh`` (NOT registered — the
-    registry is frozen; same precedent as ``sessionize_events_chunked``
-    and ``dedup_minhash_lsh_dfcap``): ADAPTIVE BAND REFINEMENT.
-
-    The registered query's 8-bit bands have only 2^8 values, so the
-    bucket space saturates at ~10^3 buckets per band and in-bucket pair
-    counts grow QUADRATICALLY once the corpus outgrows it — measured
-    (``lsh_bucket_saturation``): 800k vectors put 1.19 x 10^10 rows
-    through the candidate join (158,000x the sf0.1 count for 400x the
-    data); the uncapped query did not finish a 590 s budget there.
-
-    Refinement keeps the candidate join bounded at ANY corpus size: a
-    level-1 bucket (c, cv) holding more than ``bucket_cap`` vectors
-    extends its join key with the NEXT signature chunk's value
-    (cv2 = chs[(c+1) mod RP_CHUNKS]) — those collisions become
-    16-bit-band collisions — while buckets under the cap keep the exact
-    registered semantics (their rows carry the sentinel cv2 = -1, which
-    can never equal a real chunk value on a refined row).  Output on
-    any corpus whose buckets are all under the cap is IDENTICAL to the
-    registered query (test-asserted at sf0.01; recorded at sf0.1 too).
-
-    Measured at 800k vectors (``lsh_refined_xl`` /
-    ``lsh_refined_planted`` in SCALING_SKEW.jsonl): the refined join
-    moves 8.0 x 10^7 rows instead of 1.19 x 10^10 (148x; max refined
-    bucket 270), one pass 205 s on local[32] where the registered
-    query did not finish.  The recall tradeoff is the standard LSH
-    band-width curve, quantified: 16-bit bands keep **65% of
-    cos >= 0.9 pairs** (2,500 planted companions, median quantized cos
-    0.94; theory p^16 at p = 0.889 over 8 overlapping chunk-pair
-    bands) and ~0.7% of threshold-zone [0.4, 0.6) pairs (p^16 ~ 6e-4
-    at p = 0.63) — i.e. refinement preserves the near-DUP contract and
-    sheds the threshold-zone tail.  Mid-cosine similarity at corpus
-    scale is the cluster-blocked family's job (dedup_semantic_kmeans,
-    embedding_prototype_prune), not a band-LSH sweep's.
-
-    An exact-duplicate class larger than the refined bucket is the
-    documented ``dedup_exact``-first contract, same as the dfcap
-    variant's hot-shingle posture.  For corpora another 10^3 beyond,
-    compose another chunk (cv3) — the same move, one more level.
-
-    Since r9 the registered ``embedding_near_dup_lsh`` engages this
-    refinement AUTOMATICALLY via a memoized max-bucket-size probe (r8
-    verdict #1a); this spelling remains as the probe-free form that
-    always plans the refinement shape (the lazy plan degenerates to the
-    registered semantics when no bucket exceeds the cap)."""
-    sigs, _ = _rp_sigs_and_candidates(spark, sf_dir)
-    sigs = sigs.persist()
-    cand = _lsh_refined_candidates(sigs, bucket_cap)
-    return release_with(_lsh_cosine_verify(sigs, cand), sigs)
 
 
 @register(

@@ -1,8 +1,7 @@
 """Data-dependent strategy switches for registered queries (r8 verdict #1).
 
 Round 8 proved, with XL measurement, that three registered query families
-have scale-safe spellings that are output-identical but only existed as
-opt-in variants:
+have output-identical scale-safe spellings:
 
 - the per-user window family (``sessionize_events``,
   ``window_lag_transitions``, ``event_transitions``,
@@ -10,7 +9,7 @@ opt-in variants:
   ``asof_join_next_event``, ``asof_join_last_purchase``) blows up 3-5.9x
   on a 2x10^6-row hot user (one unsplittable PARTITION BY user_id
   WindowExec task; ``xl_event_windows`` in SCALING_SKEW.jsonl) while the
-  chunked split-and-stitch twins hold 0.81-1.30x;
+  chunked split-and-stitch spellings hold 0.81-1.30x;
 - ``simhash_near_dup``'s fixed 4x2^12 bucket space goes Theta(n^2/4096)
   once coincidence-dominated (1.95e9 candidate pairs at 2e6 random
   signatures vs 15.3e6 refined) — the recursive-pigeonhole refinement is
@@ -25,7 +24,12 @@ let each REGISTERED query pick its measured scale path automatically,
 exactly like the in-repo precedent (``dedup_components``' edge-count
 strategy pick, dedup.py).  Below every threshold the registered plan is
 byte-identical to the r8 plan, so driver oracle hashes at the gate SFs
-are untouched.
+are untouched.  Each scale path has ONE spelling — the registered query's
+switched branch — so tests and XL measurements reach it by forcing the
+switch: ``HOT_KEY_ROWS = 0`` for the window family's hybrid branch, plus
+``HOT_KEY_MAX_LIST = 0`` for its all-chunked branch, and a planted
+``lsh_max_bucket`` probe value above ``similarity.LSH_BUCKET_CAP`` for the
+LSH band refinement (see SWITCHED_QUERIES' identity tests).
 
 Probe results memoize per (sf_dir, probe) for the process lifetime: the
 inputs are immutable driver parquet (TESTDATA.md) or write-once twins,
@@ -45,7 +49,7 @@ from osm2orc_spark.tables import load
 # Per-key row count above which the per-user window family switches to
 # the chunked split-and-stitch spelling.  Measured anchors
 # (SCALING_SKEW.jsonl xl_event_windows, 2x10^6 rows on one user):
-# registered spellings 3.0-5.9x vs the uniform twin, chunked twins
+# registered spellings 3.0-5.9x vs the uniform twin, chunked spellings
 # 0.81-1.30x.  10^5 rows sort comfortably inside one window task (the
 # sf0.1 hot_user twin's 10k-row key showed no straggle in the r6 sweep),
 # so below the threshold the single-exchange registered plan — which
@@ -476,6 +480,7 @@ SWITCHED_QUERIES: dict[str, dict] = {
             "probes": ("hot_keys:events:user_id",),
             "identity_tests": (
                 f"tests/test_switches.py::test_window_family_switch_identity[{name}]",
+                f"tests/test_switches.py::test_window_family_switch_identity[{name}-all_chunked]",
                 f"tests/test_switches.py::test_window_family_hybrid_identity[{name}]",
             ),
         }

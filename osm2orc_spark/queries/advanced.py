@@ -234,15 +234,12 @@ def _asof_tol_window_core(ev: DataFrame) -> DataFrame:
     return _asof_tol_select(tagged, F.col("asof_pid"), F.col("asof_pts"))
 
 
-def _asof_tol_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
+def _asof_tol_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Split-and-stitch twin: the carry is chunked_running_last over the
     same (ts, side, oid) order the window core scans — identical
     machinery to _asof_last_chunked_core, with the tolerance applied as
     the same post-filter."""
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        chunked_running_last,
-    )
+    from osm2orc_spark.operators.chunked import chunked_running_last
 
     tagged = _asof_tol_tagged(ev).select(
         "*",
@@ -254,7 +251,7 @@ def _asof_tol_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "user_id",
         ["purchase_id", "p_ts"],
         ("ts", "side", "oid"),
-        chunk_ms or DEFAULT_CHUNK_MS,
+        chunk_ms,
     )
     return _asof_tol_select(
         d, F.col("run_purchase_id"), F.col("run_p_ts")
@@ -1010,23 +1007,6 @@ def approx_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def approx_distinct_users_sketch_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION shape of approx_distinct_users_by_type: sketch
-    alone, no exact anchor.  The registered twin adds countDistinct +
-    the bounded-invariant contract so the driver's DuckDB oracle can
-    gate it, but that exact anchor dominates cost at scale (full Expand
-    distinct machinery).  This variant is the 100 TB plan the doc cites:
-    mergeable partial HLL++ sketches map-side, one merge per group,
-    constant memory per task regardless of cardinality.  Not registered
-    (HLL values are engine-specific, so there is no value-hash oracle);
-    pinned instead by the plan test asserting NO distinct Expand and a
-    single events scan."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=HLL_RSD).alias("approx_users")
-    )
-
-
 @register(
     "funnel_view_click_purchase",
     oracle="""
@@ -1314,20 +1294,6 @@ def approx_percentiles_value_by_type(spark: SparkSession, sf_dir: str) -> DataFr
         for i, p in enumerate(APPROX_PCTS)
     ]
     return counts.select("event_type", "n_vals", *oks)
-
-
-def approx_percentiles_sketch_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION shape of approx_percentiles_value_by_type: the GK
-    sketch alone — partial sketches map-side, one merge per group, ONE
-    shuffle of sketch bytes, no rank-verification join back to events.
-    The registered twin's second full events scan + broadcast join is
-    verification harness only; this is the plan a 100 TB job runs.  Not
-    registered (GK estimates are engine-specific); pinned by the plan
-    test asserting a single events scan and no join."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.percentile_approx("value", list(APPROX_PCTS), APPROX_PCT_ACC).alias("pcts")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1761,26 +1727,14 @@ def order_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("month")
 
 
-def asof_join_last_purchase_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Split-and-stitch twin of ``asof_join_last_purchase`` — since r9
-    the registered query's own hot path (per-key routing via
-    operators/switches.py): the union+window as-of's unbounded carry
-    window blew up 3.0x on the 2x10^6-row hot user (`xl_event_windows`
-    in SCALING_SKEW.jsonl); ``chunked_running_last`` computes the
-    identical carry with every window bounded (in-chunk running last +
-    nearest prior nonempty chunk carry over the bounded summary).
-    Output proven identical at sf0.01 and on the xl_hot twin."""
-    ev = load(spark, sf_dir, "events")
-    return _asof_last_chunked_core(ev, chunk_ms)
-
-
-def _asof_last_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        chunked_running_last,
-    )
+def _asof_last_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
+    """Split-and-stitch as-of — the registered query's hot path: the
+    union+window as-of's unbounded carry window blew up 3.0x on the
+    2x10^6-row hot user (`xl_event_windows` in SCALING_SKEW.jsonl);
+    ``chunked_running_last`` computes the identical carry with every
+    window bounded (in-chunk running last + nearest prior nonempty chunk
+    carry over the bounded summary)."""
+    from osm2orc_spark.operators.chunked import chunked_running_last
 
     tagged = _asof_last_tagged(ev).select(
         "*",
@@ -1792,7 +1746,7 @@ def _asof_last_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "user_id",
         ["purchase_id", "p_ts"],
         ("ts", "side", "oid"),
-        chunk_ms or DEFAULT_CHUNK_MS,
+        chunk_ms,
     )
     return (
         d.filter((F.col("side") == 1) & F.col("run_purchase_id").isNotNull())

@@ -527,33 +527,6 @@ def lag_type_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def window_lag_transitions_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Split-and-stitch twin of ``window_lag_transitions`` — since r9
-    the registered query's own hot path (it auto-delegates here when the
-    max-per-user-rows probe exceeds switches.HOT_KEY_ROWS; r8 verdict
-    #1): the measured 5.9x hot-user blow-up (`xl_event_windows`
-    in SCALING_SKEW.jsonl) is the unbounded per-user lag window;
-    ``chunked_prev`` computes the identical lag with every window
-    bounded (in-chunk lag + a bounded-summary carry).  Output proven
-    identical at sf0.01 and on the xl_hot twin."""
-    from osm2orc_spark.operators import switches
-    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS, chunked_prev
-
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    cm = chunk_ms or switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-    d = chunked_prev(ev, "user_id", ["event_type"], ("ts", "event_id"), cm)
-    return (
-        d.filter(F.col("prev_event_type").isNotNull())
-        .groupBy(
-            F.col("prev_event_type").alias("prev_type"),
-            F.col("event_type").alias("curr_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Semi/anti joins (SURVEY §2C coverage note: free Spark builtins).
 # ---------------------------------------------------------------------------

@@ -691,61 +691,25 @@ def _scd2_window_core(ev: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Split-and-stitch twins of the per-user window family (late r8, NOT
-# registered — frozen registry; sessionize_events_chunked precedent).
+# Split-and-stitch cores of the per-user window family — the registered
+# queries' hot paths (switches.window_strategy routes hot keys here).
 # The xl_event_windows sweep measured the whole family blowing up 3-6x
 # on a 2x10^6-row hot user (one unsplittable PARTITION BY user_id
-# WindowExec task); the operators/chunked.py primitives compute the
-# identical results with every window bounded.  Identity is
-# test-asserted at sf0.01 and on the xl_hot twin.
+# WindowExec task); these cores compute the identical results with every
+# window bounded.  Identity to the window spelling is test-asserted on
+# the forced hybrid and all-chunked branches
+# (tests/test_switches.py::test_window_family_switch_identity).
 # ---------------------------------------------------------------------------
-def event_transitions_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Split-and-stitch twin of ``event_transitions`` (r9: the
-    registered query's hot path — same unbounded per-user lag shape as
-    ``window_lag_transitions``, so the same chunked_prev cure; output
-    identical because the lag is, and the downstream (from, to) count
-    is key-order-free)."""
-    from osm2orc_spark.operators import switches
-    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS, chunked_prev
-
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    cm = chunk_ms or switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-    d = chunked_prev(ev, "user_id", ["event_type"], ("ts", "event_id"), cm)
-    return (
-        d.filter(F.col("prev_event_type").isNotNull())
-        .groupBy(
-            F.col("prev_event_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "from_type", "to_type")
-    )
-
-
-def event_run_islands_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Islands via change-flag + chunked running sum: the rn-diff island
-    key of the registered spelling is replaced by run_id =
-    running_sum(type != prev_type), which induces the SAME grouping —
-    the output never exposes the key, only per-run aggregates."""
-    ev = load(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    return _islands_chunked_core(ev, chunk_ms).orderBy(
-        "user_id", "run_start", "first_event_id"
-    )
-
-
-def _islands_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
+def _islands_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Fused split-and-stitch islands — the sessionize_events_chunked
     dataflow with the type-equality fuse rule instead of the time-gap
     rule: ONE event-level window pass (in-chunk lag + running sum share
     the window), one groupBy down to local runs, the stitch/renumber
     windows over the BOUNDED per-chunk summary, one join back.  The
-    r8 two-primitive composition (chunked_prev then chunked_running_sum)
-    paid two chunk passes + two summary joins and held a 3.3x hot ratio
-    at XL; this is the same math with the passes shared.
+    r8 two-primitive composition (a chunked lag, then a separate chunked
+    running sum of the change flags) paid two chunk passes + two summary
+    joins and held a 3.3x hot ratio at XL; this is the same math with
+    the passes shared.
 
     Exactness: a chunk's first local run fuses with the previous
     nonempty chunk's last run iff their types match (runs are
@@ -754,14 +718,12 @@ def _islands_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     renumber is the sessionize closed form: global id = prefix + local
     id - fused with prefix = SUM(starts - fused) over prior chunks
     (a fused-through chunk contributes 0).  Identity to the registered
-    rn-diff spelling is asserted at tiny chunk widths (many seams), in
-    the hybrid tests, and on the XL hot twin."""
+    rn-diff spelling is asserted on the forced hybrid and all-chunked
+    branches (burst-narrowed widths, many seams) and on the XL hot twin."""
     from osm2orc_spark.operators.cache import release_with
-    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
-    cm = chunk_ms or DEFAULT_CHUNK_MS
     ms = F.unix_millis("ts")
-    evc = ev.withColumn("_chunk", F.floor(ms / F.lit(cm)).cast("bigint"))
+    evc = ev.withColumn("_chunk", F.floor(ms / F.lit(chunk_ms)).cast("bigint"))
     wl = W.partitionBy("user_id", "_chunk").orderBy("ts", "event_id")
     flagged = evc.withColumn("_prev", F.lag("event_type").over(wl)).withColumn(
         "_f",
@@ -823,21 +785,11 @@ def _islands_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     )
 
 
-def asof_join_next_event_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
+def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Forward as-of via chunked running last over the DESC scan: the
     carry-in from later chunks replaces the unbounded ignore-nulls
     window."""
-    ev = load(spark, sf_dir, "events")
-    return _asof_next_chunked_core(ev, chunk_ms).orderBy("purchase_id")
-
-
-def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        chunked_running_last,
-    )
+    from osm2orc_spark.operators.chunked import chunked_running_last
 
     tagged = _asof_next_tagged(ev)
     d = chunked_running_last(
@@ -845,7 +797,7 @@ def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "user_id",
         ["e_id", "e_ts"],
         ("ts", "is_p", "event_id"),
-        chunk_ms or DEFAULT_CHUNK_MS,
+        chunk_ms,
         desc=True,
     )
     return (
@@ -860,20 +812,7 @@ def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     )
 
 
-def scd2_user_value_bands_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """SCD2 with every window bounded: prev_band via chunked_prev, the
-    global row number via chunked_running_sum(1), n_user via a plain
-    groupBy+join (map-side combinable), and the change-stream lead via
-    chunked_prev over the DESC order — the change stream is usually
-    tiny, but a band-flapping hot user makes it the same straggler, so
-    it gets the same treatment."""
-    ev = _scd2_banded(load(spark, sf_dir, "events"))
-    return _scd2_chunked_core(ev, chunk_ms)
-
-
-def _scd2_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
+def _scd2_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Fully-fused chunked SCD2 front end: prev_band, the global row
     number AND n_user all arrive through ONE chunk pass + ONE bounded
     summary join — n_user is SUM(per-chunk counts) over the user's
@@ -881,14 +820,9 @@ def _scd2_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     join the two-primitive spelling paid (a full exchange each on
     band-flappy data, where changes are most rows) disappears.  The
     change-stream lead stays a chunked_prev over the DESC order."""
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        _with_chunk,
-        chunked_prev,
-    )
+    from osm2orc_spark.operators.chunked import _with_chunk, chunked_prev
 
-    cm = chunk_ms or DEFAULT_CHUNK_MS
-    d = _with_chunk(ev, "ts", cm, False)
+    d = _with_chunk(ev, "ts", chunk_ms, False)
     wl = W.partitionBy("user_id", "_chunk").orderBy("ts", "event_id")
     out = d.withColumn("_rn", F.row_number().over(wl)).withColumn(
         "_inprev", F.lag("band").over(wl)
@@ -922,7 +856,12 @@ def _scd2_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "n_user",
     )
     led = chunked_prev(
-        changes, "user_id", ["valid_from", "rn"], ("valid_from", "rn"), cm, desc=True
+        changes,
+        "user_id",
+        ["valid_from", "rn"],
+        ("valid_from", "rn"),
+        chunk_ms,
+        desc=True,
     )
     return led.select(
         "user_id",

@@ -338,11 +338,9 @@ def write_partitioned(
     path: str,
     partition_cols: list[str],
     sort_cols: list[str] | None = None,
-    fmt: str = "orc",
-    mode: str = "overwrite",
 ) -> None:
-    """Hive-partitioned layout: one directory per partition value, rows
-    sorted within files on ``sort_cols``.
+    """Hive-partitioned ORC layout (overwrite): one directory per
+    partition value, rows sorted within files on ``sort_cols``.
 
     The 100 TB layout recipe: partition on the coarse pruning key (date,
     region), sort within partitions on the fine one (id, type) so scans
@@ -355,11 +353,10 @@ def write_partitioned(
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     (
-        out.write.mode(mode)
-        .format(fmt)
+        out.write.mode("overwrite")
         .partitionBy(*partition_cols)
         .option("orc.block.padding", "false")
-        .save(path)
+        .orc(path)
     )
 
 

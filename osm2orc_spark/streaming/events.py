@@ -37,28 +37,24 @@ def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: in
     taken from a one-off batch read of the same path rather than
     hardcoded — a wrong hardcoded LONG schema over a micros file would
     silently read micros as "nanos" and compress event time 1000×.
-    The post-read ts normalization matches tables._load_events.
+    The post-read ts normalization is the batch loader's
+    (tables.normalize_ts).
 
     ``path`` may be a directory or a single file — the streaming file
     source requires a directory, so a file path becomes parent-dir +
     pathGlobFilter on the file name."""
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    from osm2orc_spark.tables import normalize_ts, read_events_raw
+
+    schema = read_events_raw(spark, path).schema
     reader = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", str(max_files_per_trigger)
     )
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    raw = reader.parquet(path)
-    ts_type = schema["ts"].dataType.typeName()
-    if ts_type == "long":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type != "timestamp":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_ts(reader.parquet(path))
 
 
 def hourly_rollup_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
@@ -843,91 +839,4 @@ def stream_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     return run_to_memory(
         scd2_intervals_stream(ev), "stream_scd2_mem", output_mode="update"
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas evaluation (r12 verdict #5): Spark 4's
-# successor to applyInPandasWithState, measured against the stateful
-# ceiling streaming_trigger_scaling recorded (~352k rows/s for the
-# transitions kernel at mFPT=32).  The twin below is the SAME vectorized
-# kernel behind the new handle API: keyed ValueState holds the user's
-# last (ts_us, event_id, event_type); emitted (from, to) steps are
-# bit-identical (tests pin backend identity).  Operationally TWS differs
-# in two ways that matter at 100 TB: it REQUIRES the RocksDB state store
-# (the scale posture rocksdb_state_conf already encodes), and its state
-# schema is declared per-variable with optional TTL — per-key eviction
-# without the timeout-callback dance.  Adoption decision lives with the
-# measured A/B (tws_ab in SCALING_SKEW.jsonl).
-# ---------------------------------------------------------------------------
-def tws_available() -> bool:
-    """Whether transformWithStateInPandas can actually RUN here: beyond
-    the DataFrame API (present since Spark 4.0), its state-server RPC is
-    protobuf — the generated StateMessage_pb2 pins runtime 6.33.0 and
-    the TWS *driver worker* imports it at query start (measured in this
-    container: STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE, ImportError
-    'google.protobuf').  applyInPandasWithState has no such dependency —
-    its state rides the Arrow stream — which is an honest deployment
-    consideration by itself."""
-    try:
-        from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def transitions_stream_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas twin of transitions_stream — identical
-    vectorized pair emission, state via the TWS ValueState handle.
-    Requires the RocksDB state store provider (a TWS hard requirement;
-    pass rocksdb_state_conf() to the runner) and a google.protobuf
-    runtime matching StateMessage_pb2 (see tws_available)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Transitions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState(
-                "last", "last_us long, last_id long, last_type string"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-            import pandas as pd
-
-            prev = self._last.get() if self._last.exists() else None
-            frames = [pdf for pdf in rows]
-            if not frames:
-                return
-            pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-            # same unit-pinning rule as the applyInPandasWithState twin:
-            # Arrow may deliver [ns] or [us]
-            pdf = pdf.assign(_us=pdf["ts"].astype("datetime64[us]").astype("int64"))
-            pdf = pdf.sort_values(["_us", "event_id"])
-            types = pdf["event_type"].to_numpy()
-            if prev is not None:
-                froms = np.concatenate(([prev[2]], types[:-1]))
-                tos = types
-            else:
-                froms = types[:-1]
-                tos = types[1:]
-            tail = pdf.iloc[-1]
-            self._last.update(
-                (int(tail["_us"]), int(tail["event_id"]), str(tail["event_type"]))
-            )
-            yield pd.DataFrame(
-                {"user_id": key[0], "from_type": froms, "to_type": tos}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        Transitions(),
-        "user_id long, from_type string, to_type string",
-        "update",
-        "none",
     )

@@ -36,27 +36,18 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the hint pins the single-shuffle-free plan at any scale.
         return F.broadcast(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     if name == "events":
-        return _load_events(spark, f"{sf_dir}/{name}.parquet")
+        # session-timezone TIMESTAMP ts however the file encodes it
+        return normalize_ts(read_events_raw(spark, f"{sf_dir}/{name}.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Read events.parquet with a session-timezone TIMESTAMP ``ts``
-    regardless of how the file encodes it.
+def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
+    """Batch-read events parquet with TIMESTAMP(NANOS) surfaced as LONG.
 
     Drivers have shipped this table two ways: TIMESTAMP(NANOS), which
     Spark's reader rejects unless nanos are surfaced as raw LONG, and
     plain TIMESTAMP(MICROS) without UTC adjustment, which Spark reads as
-    TIMESTAMP_NTZ. Query code downstream was written against TimestampType
-    (comparisons with timestamp literals, window()/date_trunc), so both
-    encodings normalize to it here:
-
-    - LONG (nanos-as-long): integer-divide to micros (the generated data
-      is µs-precision, so lossless) and convert via timestamp_micros.
-    - TIMESTAMP_NTZ: cast to TIMESTAMP. The cast attaches the session
-      timezone to the wall-clock value and collect() renders in the same
-      session timezone, so the round-trip preserves the wall-clock the
-      DuckDB oracle sees no matter what the session timezone is.
+    TIMESTAMP_NTZ; ``normalize_ts`` turns either into TIMESTAMP.
 
     The nanosAsLong conf is session-level and deliberately not restored --
     the scan resolves it lazily at execution time, so a set/restore scope
@@ -64,7 +55,22 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     TIMESTAMP(NANOS) files, which this repo always treats as long-typed.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    return spark.read.parquet(path)
+
+
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """``ts`` as session-timezone TIMESTAMP, batch or streaming. Query
+    code downstream was written against TimestampType (comparisons with
+    timestamp literals, window()/date_trunc), so both on-disk encodings
+    normalize to it:
+
+    - LONG (nanos-as-long): integer-divide to micros (the generated data
+      is µs-precision, so lossless) and convert via timestamp_micros.
+    - TIMESTAMP_NTZ: cast to TIMESTAMP. The cast attaches the session
+      timezone to the wall-clock value and collect() renders in the same
+      session timezone, so the round-trip preserves the wall-clock the
+      DuckDB oracle sees no matter what the session timezone is.
+    """
     ts_type = df.schema["ts"].dataType.typeName()
     if ts_type == "long":
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -133,25 +133,27 @@ NOTES = {
         "does not dedup subtrees. Measured xl_hot: 1.01x skew ratio, "
         "2.9x faster than the registered spelling on the hot twin."
     ),
-    "embedding_near_dup_lsh_refined": (
-        "Adaptive band refinement (late r8, non-registered scale variant "
-        "of embedding_near_dup_lsh — output-identical below the cap): "
-        "hot level-1 buckets (membership table bounded at 2,048 rows, "
-        "BROADCAST anti/semi joins) extend their join key with the next "
-        "8-bit signature chunk; the candidate equi-join runs on "
-        "(c, cv, cv2) with a -1 sentinel for cold rows. Measured at 800k "
-        "vectors: 8.0e7 join rows vs the registered shape's 1.19e10 "
-        "(which DNFs); 65% recall at cos >= 0.9 on planted pairs."
+    "embedding_near_dup_lsh_forced_refined": (
+        "Adaptive band refinement — embedding_near_dup_lsh forced onto its "
+        "refined branch (max-bucket probe planted above LSH_BUCKET_CAP; "
+        "output-identical below the cap): hot level-1 buckets (membership "
+        "table bounded at 2,048 rows, BROADCAST anti/semi joins) extend "
+        "their join key with the next 8-bit signature chunk; the candidate "
+        "equi-join runs on (c, cv, cv2) with a -1 sentinel for cold rows. "
+        "Measured at 800k vectors: 8.0e7 join rows vs the unrefined "
+        "shape's 1.19e10 (which DNFs); 65% recall at cos >= 0.9 on "
+        "planted pairs."
     ),
-    "scd2_user_value_bands_chunked": (
-        "Split-and-stitch SCD2 (late r8, non-registered; exemplar of the "
-        "operators/chunked.py family — transitions/islands/as-of twins "
-        "share the same three primitives): every window partitions by "
-        "(user_id, chunk) or runs over the bounded per-chunk summary; "
-        "n_user is a map-side-combinable groupBy+join, never "
-        "count() OVER (PARTITION BY user). Output proven row-identical "
-        "to the registered query at sf0.01 and the 4M-row xl_hot twin; "
-        "hot-user skew 5.0x -> 0.96."
+    "scd2_user_value_bands_all_chunked": (
+        "Split-and-stitch SCD2 — scd2_user_value_bands forced onto its "
+        "all-chunked branch (HOT_KEY_ROWS=0, HOT_KEY_MAX_LIST=0; NULL-key "
+        "rows keep the window core, unioned): the event-level windows "
+        "partition by (user_id, chunk) or run over the bounded per-chunk "
+        "summary, which also carries the global row number and n_user — "
+        "never count() OVER (PARTITION BY user); the change-stream lead is "
+        "a chunked_prev over the DESC order. Output row-identical to the "
+        "window branch at sf0.01 and on the 4M-row xl_hot twin; hot-user "
+        "skew 5.0x -> 0.96."
     ),
     "simhash_near_dup_refined": (
         "Recursive-pigeonhole SimHash refinement (late r8; since r9 the "
@@ -336,8 +338,7 @@ def main() -> None:
         "",
     ]
     from osm2orc_spark.operators.dedup import simhash_near_dup_refined
-    from osm2orc_spark.queries.sequences import scd2_user_value_bands_chunked
-    from osm2orc_spark.operators.similarity import embedding_near_dup_lsh_refined
+    from osm2orc_spark.operators.similarity import LSH_BUCKET_CAP
     from osm2orc_spark.queries.relational import sessionize_events_chunked
 
     from osm2orc_spark.operators import switches
@@ -345,19 +346,33 @@ def main() -> None:
     from pyspark.sql import functions as F
     from osm2orc_spark.tables import load
 
-    def _forced(base_name: str, knob: str):
+    def _forced(base_name: str, **knobs):
         """Capture a registered query's switch path by forcing its
-        threshold knob to -1 for the duration of the plan build."""
+        threshold knobs for the duration of the plan build."""
 
         def fn(spark, sf):
-            saved = getattr(switches, knob)
-            setattr(switches, knob, -1)
+            saved = {k: getattr(switches, k) for k in knobs}
+            for k, v in knobs.items():
+                setattr(switches, k, v)
+            switches.probe_cache_clear()
             try:
                 return qs[base_name].fn(spark, sf)
             finally:
-                setattr(switches, knob, saved)
+                for k, v in saved.items():
+                    setattr(switches, k, v)
+                switches.probe_cache_clear()
 
         return fn
+
+    def _forced_lsh_refined(spark, sf):
+        """Plant a max-bucket probe value above the cap so the registered
+        LSH query plans its refined branch."""
+        key = switches._cache_key(sf, "lsh_max_bucket")
+        switches._PROBE_CACHE[key] = LSH_BUCKET_CAP + 1
+        try:
+            return qs["embedding_near_dup_lsh"].fn(spark, sf)
+        finally:
+            switches._PROBE_CACHE.pop(key, None)
 
     def _forced_knn_scaledk(spark, sf):
         """The kNN switches live in ann_index (not switches): force the
@@ -383,20 +398,22 @@ def main() -> None:
 
     extra = {
         "sessionize_events_chunked": sessionize_events_chunked,
-        "embedding_near_dup_lsh_refined": embedding_near_dup_lsh_refined,
+        "embedding_near_dup_lsh_forced_refined": _forced_lsh_refined,
         "simhash_near_dup_refined": simhash_near_dup_refined,
-        "scd2_user_value_bands_chunked": scd2_user_value_bands_chunked,
+        "scd2_user_value_bands_all_chunked": _forced(
+            "scd2_user_value_bands", HOT_KEY_ROWS=0, HOT_KEY_MAX_LIST=0
+        ),
         "curation_decontaminate_factored": _forced(
-            "curation_decontaminate", "DECON_FLAT_PAIRS_MAX"
+            "curation_decontaminate", DECON_FLAT_PAIRS_MAX=-1
         ),
         "customer_rfm_segments_ranged": _forced(
-            "customer_rfm_segments", "DIM_WINDOW_ROWS_MAX"
+            "customer_rfm_segments", DIM_WINDOW_ROWS_MAX=-1
         ),
         "part_abc_pareto_ranged": _forced(
-            "part_abc_pareto", "DIM_WINDOW_ROWS_MAX"
+            "part_abc_pareto", DIM_WINDOW_ROWS_MAX=-1
         ),
         "percentiles_value_by_type_ranged": _forced(
-            "percentiles_value_by_type", "DIM_WINDOW_ROWS_MAX"
+            "percentiles_value_by_type", DIM_WINDOW_ROWS_MAX=-1
         ),
         "rolling_hour_user_activity_ghost": lambda spark, sf: (
             _rolling_hour_chunked_core(

@@ -31,6 +31,7 @@ Output: one JSON line per (query, mode) + a final summary line.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -139,58 +140,58 @@ XL_QUERIES = [
 XL_PASSES = int(os.environ.get("SKEW_XL_PASSES", "2"))
 
 
-def _extra_fns() -> dict:
-    """Non-registered scale-path variants measurable by this harness."""
-    from osm2orc_spark.queries.advanced import asof_join_last_purchase_chunked
-    from osm2orc_spark.queries.relational import (
-        sessionize_events_chunked,
-        window_lag_transitions_chunked,
-    )
-    from osm2orc_spark.queries.sequences import (
-        asof_join_next_event_chunked,
-        event_run_islands_chunked,
-        event_transitions_chunked,
-        scd2_user_value_bands_chunked,
-    )
-
-    return {
-        "sessionize_events_chunked": sessionize_events_chunked,
-        "window_lag_transitions_chunked": window_lag_transitions_chunked,
-        "event_run_islands_chunked": event_run_islands_chunked,
-        "event_transitions_chunked": event_transitions_chunked,
-        "asof_join_next_event_chunked": asof_join_next_event_chunked,
-        "scd2_user_value_bands_chunked": scd2_user_value_bands_chunked,
-        "asof_join_last_purchase_chunked": asof_join_last_purchase_chunked,
-    }
+# The per-user window family (late r8), measured on both XL event twins
+# by --event-windows: each registered query on its own switch, then
+# forced onto the all-chunked branch (ALL_CHUNKED).  The window spellings
+# blow up 3-6x on the 2M-row hot user; the chunked spellings hold
+# 0.81-1.30 (xl_event_windows* in SCALING_SKEW.jsonl).  Under
+# HOT_KEY_ROWS=0 the burst ladder's per-task bar is 1 row, so the forced
+# branch also runs at the narrowest chunk width the data allows; each
+# record carries the width that ran.
+EVENT_WINDOW_QUERIES = (
+    "window_lag_transitions",
+    "event_transitions",
+    "event_run_islands",
+    "asof_join_next_event",
+    "scd2_user_value_bands",
+    "asof_join_last_purchase",
+)
+ALL_CHUNKED = {"HOT_KEY_ROWS": 0, "HOT_KEY_MAX_LIST": 0}
 
 
-# The per-user window family (late r8): each registered query and its
-# chunked twin, measured on both XL event twins by --event-windows.
-# The registered spellings blow up 3-6x on the 2M-row hot user; the
-# chunked twins hold 0.81-1.30 (xl_event_windows* in SCALING_SKEW.jsonl).
-EVENT_WINDOW_PAIRS = [
-    ("window_lag_transitions", "window_lag_transitions_chunked"),
-    ("event_transitions", "event_transitions_chunked"),
-    ("event_run_islands", "event_run_islands_chunked"),
-    ("asof_join_next_event", "asof_join_next_event_chunked"),
-    ("scd2_user_value_bands", "scd2_user_value_bands_chunked"),
-    ("asof_join_last_purchase", "asof_join_last_purchase_chunked"),
-]
+@contextlib.contextmanager
+def _forced(module, **knobs):
+    """Set threshold knobs on ``module`` for the duration of the block
+    and clear the memoized probes on entry and exit, so the forced
+    switch re-probes and later runs see the defaults again."""
+    from osm2orc_spark.operators import switches
+
+    saved = {k: getattr(module, k) for k in knobs}
+    switches.probe_cache_clear()
+    for k, v in knobs.items():
+        setattr(module, k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            setattr(module, k, v)
+        switches.probe_cache_clear()
 
 
 def main_event_windows() -> None:
     """Reproduce the xl_event_windows + xl_event_windows_chunked record:
     walls (warm + XL_PASSES, min) on both XL event twins for every
-    registered per-user window query and its chunked twin, plus a
-    row-identity check of each pair on the xl_hot twin.
+    registered per-user window query, on its own switch and forced onto
+    the all-chunked branch, plus a row-identity check of the two on the
+    xl_hot twin.
 
-    r9: the REGISTERED queries now auto-switch to the chunked spelling
-    when the max-rows-per-key probe exceeds switches.HOT_KEY_ROWS
-    (r8 verdict #1) — each record carries the strategy that actually
-    ran (the probe is memoized, so the warm pass pays it once per twin;
-    timed passes are probe-free, the steady-state a probe-once/run-many
-    deployment sees)."""
+    The registered queries auto-switch to the chunked spelling when the
+    hot-key probe exceeds switches.HOT_KEY_ROWS — each record carries the
+    strategy that actually ran (the probe is memoized, so the warm pass
+    pays it once per twin; timed passes are probe-free, the steady state
+    a probe-once/run-many deployment sees)."""
     from osm2orc_spark.operators import switches
+    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
     spark = get_spark(
         app_name="measure_scaling_event_windows",
@@ -199,42 +200,48 @@ def main_event_windows() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     dirs = _build_xl_data(spark)
     qs = all_queries()
-    extra = _extra_fns()
-    engaged = {
-        mode: switches.window_strategy(spark, dirs[mode])[0]
-        for mode in ("xl_base", "xl_hot")
-    }
-    for reg_name, chk_name in EVENT_WINDOW_PAIRS:
-        for name in (reg_name, chk_name):
-            fn = qs[name].fn if name in qs else extra[name]
-            rec = {"micro": "xl_event_windows" + ("_chunked" if name == chk_name else ""),
+    for name in EVENT_WINDOW_QUERIES:
+        fn = qs[name].fn
+        for knobs in ({}, ALL_CHUNKED):
+            rec = {"micro": "xl_event_windows" + ("_chunked" if knobs else ""),
                    "round": 9, "query": name, "xl_rep": XL_REP}
-            if name == reg_name:
-                rec["strategy"] = dict(engaged)
             walls = {}
-            for mode in ("xl_base", "xl_hot"):
-                w = []
-                for i in range(XL_PASSES + 1):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    fn(spark, dirs[mode]).count()
-                    w.append(time.perf_counter() - t0)
-                walls[mode] = min(w[1:])
-                rec[f"{mode.split('_')[1]}_wall_min_sec"] = round(walls[mode], 3)
+            with _forced(switches, **knobs):
+                rec["strategy"] = {
+                    mode: switches.window_strategy(spark, dirs[mode])[0]
+                    for mode in ("xl_base", "xl_hot")
+                }
+                if knobs:
+                    rec["chunk_ms"] = {
+                        mode: switches.burst_chunk_ms(
+                            spark, dirs[mode], DEFAULT_CHUNK_MS
+                        )
+                        for mode in ("xl_base", "xl_hot")
+                    }
+                for mode in ("xl_base", "xl_hot"):
+                    w = []
+                    for i in range(XL_PASSES + 1):
+                        spark.catalog.clearCache()
+                        t0 = time.perf_counter()
+                        fn(spark, dirs[mode]).count()
+                        w.append(time.perf_counter() - t0)
+                    walls[mode] = min(w[1:])
+                    rec[f"{mode.split('_')[1]}_wall_min_sec"] = round(walls[mode], 3)
             rec["skew_ratio"] = round(walls["xl_hot"] / walls["xl_base"], 2)
             print(json.dumps(rec), flush=True)
-        reg = qs[reg_name].fn(spark, dirs["xl_hot"])
-        chk = extra[chk_name](spark, dirs["xl_hot"])
-        n_reg, n_chk = reg.count(), chk.count()
-        same = (
-            n_reg == n_chk
-            and reg.exceptAll(chk.select(*reg.columns)).count() == 0
-            and chk.select(*reg.columns).exceptAll(reg).count() == 0
-        )
+        reg = fn(spark, dirs["xl_hot"])
+        with _forced(switches, **ALL_CHUNKED):
+            chk = fn(spark, dirs["xl_hot"])
+            n_reg, n_chk = reg.count(), chk.count()
+            same = (
+                n_reg == n_chk
+                and reg.exceptAll(chk.select(*reg.columns)).count() == 0
+                and chk.select(*reg.columns).exceptAll(reg).count() == 0
+            )
         print(
             json.dumps(
                 {"micro": "xl_event_windows_identity", "round": 9,
-                 "pair": reg_name, "rows": n_reg, "identical": same}
+                 "pair": name, "rows": n_reg, "identical": same}
             ),
             flush=True,
         )
@@ -650,8 +657,10 @@ def main_skew_xl() -> None:
     if not only:
         print(json.dumps(_df_micro(spark, dirs["xl_hot"])), flush=True)
         print(json.dumps(_sessionize_xl_identity(spark, dirs["xl_hot"])), flush=True)
+    from osm2orc_spark.queries.relational import sessionize_events_chunked
+
     qs = all_queries()
-    extra = _extra_fns()
+    extra = {"sessionize_events_chunked": sessionize_events_chunked}
     results: dict[str, dict] = {}
     for name, family in XL_QUERIES:
         if only and name not in only:
@@ -833,15 +842,17 @@ def _build_xl_embeddings(spark) -> str:
     return mode_dir
 
 
-# embedding_near_dup_lsh (registered) is deliberately absent: its 8-bit
-# band space saturates at this scale (1.19e10 join rows, DNF in 590s —
-# `lsh_bucket_saturation`); the refined variant below is the scale path.
+# embedding_near_dup_lsh runs forced onto its refined branch (a planted
+# max-bucket probe value above LSH_BUCKET_CAP): its 8-bit band space
+# saturates at this scale (1.19e10 join rows, DNF in 590s —
+# `lsh_bucket_saturation`), and the forced branch keeps the timed passes
+# free of the probe job.
 ANN_XL_QUERIES = (
     "ann_topk_bruteforce",
     "ann_ivf_probe",
     "ann_ivfpq_probe",
     "ann_topk_hamming",
-    "embedding_near_dup_lsh_refined",
+    "embedding_near_dup_lsh",
 )
 
 
@@ -859,13 +870,11 @@ def main_ann_micro() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from osm2orc_spark.operators.similarity import (
-        embedding_near_dup_lsh_refined,
-    )
+    from osm2orc_spark.operators import switches
+    from osm2orc_spark.operators.similarity import LSH_BUCKET_CAP
 
     emb_dir = _build_xl_embeddings(spark)
     qs = all_queries()
-    extra = {"embedding_near_dup_lsh_refined": embedding_near_dup_lsh_refined}
     only = {q for q in os.environ.get("ANN_ONLY", "").split(",") if q}
     for name in ANN_XL_QUERIES:
         if only and name not in only:
@@ -874,8 +883,12 @@ def main_ann_micro() -> None:
         n_out = 0
         for i in range(XL_PASSES + 1):  # first pass warms
             spark.catalog.clearCache()
+            if name == "embedding_near_dup_lsh":
+                switches._PROBE_CACHE[
+                    switches._cache_key(emb_dir, "lsh_max_bucket")
+                ] = LSH_BUCKET_CAP + 1
             t0 = time.perf_counter()
-            out = qs[name].fn(spark, emb_dir) if name in qs else extra[name](spark, emb_dir)
+            out = qs[name].fn(spark, emb_dir)
             n_out = out.count()
             walls.append(time.perf_counter() - t0)
         print(
@@ -1889,10 +1902,11 @@ def main_components_micro() -> None:
     """Measure dedup_components' two physical strategies on the 40x XL
     twins: the default measured-edge-count switch (bounded driver
     union-find under CC_COLLECT_MAX_EDGES) vs the FORCED distributed
-    min-label fixpoint (collect_max_edges=-1, local checkpoint) — the
+    min-label fixpoint (CC_COLLECT_MAX_EDGES=-1, local checkpoint) — the
     100 TB path, which until this micro had only sf0.01 identity tests.
     Records walls (min-of-2 after warm-up), row counts, and set
     identity between the strategies on each twin."""
+    from osm2orc_spark.operators import dedup
     from osm2orc_spark.operators.dedup import dedup_components
 
     spark = get_spark(
@@ -1904,21 +1918,24 @@ def main_components_micro() -> None:
     for mode in ("xl_base", "xl_hot"):
         rec: dict = {"micro": "components_strategies_xl", "round": 9,
                      "mode": mode, "xl_rep": XL_REP}
-        for tag, kw in (("unionfind", {}), ("fixpoint", {"collect_max_edges": -1})):
+        for tag, knobs in (("unionfind", {}), ("fixpoint", {"CC_COLLECT_MAX_EDGES": -1})):
             walls = []
-            for _ in range(XL_PASSES + 1):  # first pass warms
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                dedup_components(spark, dirs[mode], **kw).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                walls.append(time.perf_counter() - t0)
+            with _forced(dedup, **knobs):
+                for _ in range(XL_PASSES + 1):  # first pass warms
+                    spark.catalog.clearCache()
+                    t0 = time.perf_counter()
+                    dedup_components(spark, dirs[mode]).write.format(
+                        "noop"
+                    ).mode("overwrite").save()
+                    walls.append(time.perf_counter() - t0)
             rec[f"{tag}_wall_min_sec"] = round(min(walls[1:]), 3)
         spark.catalog.clearCache()
         uf = dedup_components(spark, dirs[mode])
-        fx = dedup_components(spark, dirs[mode], collect_max_edges=-1)
-        n_uf, n_fx = uf.count(), fx.count()
-        n_match = uf.join(fx, ["doc_id", "component"]).count()
+        n_uf = uf.count()
+        with _forced(dedup, CC_COLLECT_MAX_EDGES=-1):
+            fx = dedup_components(spark, dirs[mode])
+            n_fx = fx.count()
+            n_match = uf.join(fx, ["doc_id", "component"]).count()
         rec["rows"] = n_uf
         rec["identical"] = bool(n_uf == n_fx == n_match)
         print(json.dumps(rec), flush=True)

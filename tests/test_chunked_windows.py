@@ -1,14 +1,16 @@
 """Split-and-stitch window family: exactness of the chunked primitives
-and of the five *_chunked variants (late r8).
+(late r8).
 
 The xl_event_windows sweep measured the per-user window family blowing
 up 3-6x on a 2x10^6-row hot user; the cure (operators/chunked.py) must
 be OUTPUT-IDENTICAL — the primitives are checked directly against the
-unbounded-window spelling they replace, and every variant against its
-registered twin.  A tiny chunk width (forcing MANY seams through the
-stitch paths) is used alongside the default, so seam handling is
-exercised even at sf0.01 where the default 1 h chunk may leave few
-boundaries.
+unbounded-window spelling they replace, and every registered query's
+all-chunked branch against its window branch at a PINNED chunk width.
+A tiny chunk width (forcing MANY seams through the stitch paths) is used
+alongside the default, so seam handling is exercised even at sf0.01
+where the default 1 h chunk may leave few boundaries.  (The burst-ladder
+width the branches pick on their own is covered by
+test_switches.py::test_window_family_switch_identity.)
 """
 
 from __future__ import annotations
@@ -17,11 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from osm2orc_spark.operators.chunked import (
-    chunked_prev,
-    chunked_running_last,
-    chunked_running_sum,
-)
+from osm2orc_spark.operators.chunked import chunked_prev, chunked_running_last
 from osm2orc_spark.tables import load
 
 # 1-minute chunks: the sf0.01 event stream spans days, so every user
@@ -50,22 +48,6 @@ def test_chunked_prev_equals_lag(spark, events, chunk_ms):
 
 
 @pytest.mark.parametrize("chunk_ms", [TINY_CHUNK_MS, 3_600_000])
-def test_chunked_running_sum_equals_window(spark, events, chunk_ms):
-    flag = (F.col("event_type") == "purchase").cast("long")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    exp = events.select("user_id", "event_id", F.sum(flag).over(w).alias("rs"))
-    got = chunked_running_sum(
-        events, "user_id", flag, "rs", ("ts", "event_id"), chunk_ms
-    ).select("user_id", "event_id", "rs")
-    assert exp.exceptAll(got).count() == 0
-    assert got.exceptAll(exp).count() == 0
-
-
-@pytest.mark.parametrize("chunk_ms", [TINY_CHUNK_MS, 3_600_000])
 def test_chunked_running_last_desc_equals_window(spark, events, chunk_ms):
     d = events.withColumn(
         "is_p", (F.col("event_type") == "purchase").cast("int")
@@ -88,34 +70,40 @@ def test_chunked_running_last_desc_equals_window(spark, events, chunk_ms):
 
 
 def _variant_pairs():
-    from osm2orc_spark.queries.advanced import asof_join_last_purchase_chunked
-    from osm2orc_spark.queries.relational import window_lag_transitions_chunked
-    from osm2orc_spark.queries.sequences import (
-        asof_join_next_event_chunked,
-        event_run_islands_chunked,
-        event_transitions_chunked,
-        scd2_user_value_bands_chunked,
-    )
+    from osm2orc_spark.registry import all_queries
 
-    return [
-        ("window_lag_transitions", window_lag_transitions_chunked),
-        ("event_transitions", event_transitions_chunked),
-        ("event_run_islands", event_run_islands_chunked),
-        ("asof_join_next_event", asof_join_next_event_chunked),
-        ("scd2_user_value_bands", scd2_user_value_bands_chunked),
-        ("asof_join_last_purchase", asof_join_last_purchase_chunked),
+    names = [
+        "window_lag_transitions",
+        "event_transitions",
+        "event_run_islands",
+        "asof_join_next_event",
+        "scd2_user_value_bands",
+        "asof_join_last_purchase",
     ]
+    return [(n, all_queries()[n].fn) for n in names]
 
 
 @pytest.mark.parametrize("name,fn", _variant_pairs())
 @pytest.mark.parametrize("chunk_ms", [TINY_CHUNK_MS, None])
 def test_chunked_variant_identical_to_registered(
-    spark, sf_correctness, name, fn, chunk_ms
+    spark, sf_correctness, name, fn, chunk_ms, monkeypatch
 ):
-    from osm2orc_spark.registry import all_queries
+    """The registered query forced onto its all-chunked branch (every
+    user hot, hot list overflowed) with the chunk width pinned to
+    ``chunk_ms`` (None: the core's default width) equals its default
+    window branch."""
+    from osm2orc_spark.operators import switches
 
-    reg = all_queries()[name].fn(spark, sf_correctness)
-    chk = fn(spark, sf_correctness, chunk_ms=chunk_ms)
+    reg = fn(spark, sf_correctness)
+    monkeypatch.setattr(switches, "HOT_KEY_ROWS", 0)
+    monkeypatch.setattr(switches, "HOT_KEY_MAX_LIST", 0)
+    monkeypatch.setattr(
+        switches,
+        "burst_chunk_ms",
+        lambda spark, sf_dir, default_ms, *a, **k: chunk_ms or default_ms,
+    )
+    assert switches.window_strategy(spark, sf_correctness)[0] == "chunked"
+    chk = fn(spark, sf_correctness)
     n_reg, n_chk = reg.count(), chk.count()
     assert n_reg > 0
     assert n_reg == n_chk
@@ -152,14 +140,6 @@ _rows = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_chunked_primitives_equal_windows_property(spark, rows, chunk_ms):
-    from pyspark.sql.window import Window as W
-
-    from osm2orc_spark.operators.chunked import (
-        chunked_prev,
-        chunked_running_last,
-        chunked_running_sum,
-    )
-
     df = spark.createDataFrame(
         [(u, ts * 3, i, v, t) for i, (u, ts, v, t) in enumerate(rows)],
         "user_id int, ms long, event_id long, v int, t string",
@@ -170,34 +150,24 @@ def test_chunked_primitives_equal_windows_property(spark, rows, chunk_ms):
         "v",
         "t",
     )
-    from osm2orc_spark.operators.chunked import chunked_prev_and_rn
-
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     wf = w.rowsBetween(W.unboundedPreceding, 0)
     exp = df.select(
         "user_id",
         "event_id",
         F.lag("t").over(w).alias("p"),
-        F.sum("v").over(wf).alias("rs"),
         F.last("v", ignorenulls=True).over(wf).alias("rl"),
-        F.row_number().over(w).alias("rn"),
     ).collect()
     got_p = chunked_prev(df, "user_id", ["t"], ("ts", "event_id"), chunk_ms)
-    got_s = chunked_running_sum(df, "user_id", "v", "rs", ("ts", "event_id"), chunk_ms)
     got_l = chunked_running_last(df, "user_id", ["v"], ("ts", "event_id"), chunk_ms)
-    got_pr = chunked_prev_and_rn(df, "user_id", ["t"], ("ts", "event_id"), chunk_ms)
     by_id = {}
     for r in got_p.collect():
         by_id[r.event_id] = [r.prev_t]
-    for r in got_s.collect():
-        by_id[r.event_id].append(r.rs)
     for r in got_l.collect():
         by_id[r.event_id].append(r.run_v)
-    for r in got_pr.collect():
-        by_id[r.event_id].extend([r.prev_t, r.rn])
     for r in exp:
-        assert by_id[r.event_id] == [r.p, r.rs, r.rl, r.p, r.rn], (
-            r.event_id, by_id[r.event_id], (r.p, r.rs, r.rl, r.rn))
+        assert by_id[r.event_id] == [r.p, r.rl], (
+            r.event_id, by_id[r.event_id], (r.p, r.rl))
 
 
 # --- ghost-replication trailing RANGE frame (r10 scale-killer #12) --------

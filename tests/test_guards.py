@@ -56,42 +56,47 @@ def test_guard_threshold_admits_gate_scale_tables(spark):
         assert n <= QUADRATIC_GUARD_MAX_ROWS
 
 
-def test_dedup_components_strategies_agree(spark, sf_correctness, tmp_path):
+def test_dedup_components_strategies_agree(
+    spark, sf_correctness, tmp_path, monkeypatch
+):
     """All three physical strategies — bounded driver union-find (the
     default under CC_COLLECT_MAX_EDGES), distributed local-checkpoint
-    fixpoint, and distributed reliable-checkpoint fixpoint — converge to
-    the identical min-label assignment.  collect_max_edges=-1 forces the
-    distributed path UNCONDITIONALLY (r6 advice: with =0 and a fixture
-    yielding zero LSH pairs, n_edges==0 satisfies 0 <= 0 and the test
-    silently compares union-find to itself); the non-singleton assert
-    below makes the comparison non-vacuous."""
+    fixpoint (no checkpoint dir set), and distributed reliable-checkpoint
+    fixpoint (checkpoint dir set) — converge to the identical min-label
+    assignment.  CC_COLLECT_MAX_EDGES=-1 forces the distributed path
+    UNCONDITIONALLY (r6 advice: with 0 and a fixture yielding zero LSH
+    pairs, n_edges==0 satisfies 0 <= 0 and the test silently compares
+    union-find to itself); the non-singleton assert below makes the
+    comparison non-vacuous."""
+    import os
+
+    from osm2orc_spark.operators import dedup
+
     unionfind = sorted(
         map(tuple, dedup_components(spark, sf_correctness).collect())
     )
     # non-vacuous: the fixture must contain at least one near-dup pair
     # (some component label differs from its doc_id)
     assert any(doc != comp for doc, comp in unionfind)
-    distributed = sorted(
-        map(
-            tuple,
-            dedup_components(spark, sf_correctness, collect_max_edges=-1).collect(),
+    monkeypatch.setattr(dedup, "CC_COLLECT_MAX_EDGES", -1)
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    local = sorted(map(tuple, dedup_components(spark, sf_correctness).collect()))
+    assert local == unionfind
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        reliable = sorted(
+            map(tuple, dedup_components(spark, sf_correctness).collect())
         )
-    )
-    assert distributed == unionfind
-    assert spark.sparkContext.getCheckpointDir() is None
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        dedup_components(
-            spark, sf_correctness, checkpoint="reliable", collect_max_edges=-1
+    finally:
+        # the checkpoint dir is context-wide; later tests expect none
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            spark._jvm.scala.Option.apply(None)
         )
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    reliable = sorted(
-        map(
-            tuple,
-            dedup_components(
-                spark, sf_correctness, checkpoint="reliable", collect_max_edges=-1
-            ).collect(),
-        )
-    )
+    assert sc.getCheckpointDir() is None
     assert reliable == unionfind
-    with pytest.raises(ValueError, match="checkpoint must be"):
-        dedup_components(spark, sf_correctness, checkpoint="bogus")
+    # the reliable branch really ran: its rounds left RDD checkpoints
+    assert any(
+        name.startswith("rdd-") for _, dirs, _ in os.walk(ckpt) for name in dirs
+    )

@@ -5,6 +5,8 @@ but stop scaling."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from osm2orc_spark.registry import all_queries
@@ -179,17 +181,18 @@ def test_pair_distinct_rides_verify_distribution(spark, sf_correctness):
         "dedup_minhash_lsh",
         "dedup_containment_ppjoin",
         "dedup_containment_pairs",
+        "dedup_ngram_jaccard",
+        "dedup_minhash_calibration",
     ):
         df = QUERIES[name].fn(spark, sf_correctness)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         final = plan.split("== Initial Plan ==")[0]
+        # the partitioning expression list only, not the whole line
         offenders = [
-            line.strip()[:160]
-            for line in final.splitlines()
-            if "Exchange hashpartitioning" in line
-            and "doc_a" in line
-            and "doc_b" in line
+            keys
+            for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
+            if re.search(r"\bdoc_a#", keys) and re.search(r"\bdoc_b#", keys)
         ]
         assert not offenders, f"{name}: pair-keyed exchange survived: {offenders}"
         assert "REPARTITION_BY_NUM" in final, name  # the fused doc_a exchange
@@ -612,34 +615,6 @@ def test_duplicate_spans_dup_filter_is_skew_safe_agg(spark, sf_correctness):
     assert "windowspecdefinition(span" not in plan
 
 
-def test_sketch_only_variants_are_single_scan_constant_memory(spark, sf_correctness):
-    """The registered approx-sketch queries carry exact anchors so the
-    DuckDB oracle can gate them; the production 100 TB shape is the
-    sketch alone.  Pin that shape on the non-registered *_sketch_only
-    twins: exactly one events scan, no join, no distinct Expand — the
-    constant-memory mergeable-sketch plan the registered docs cite."""
-    import contextlib
-    import io
-
-    from osm2orc_spark.queries.advanced import (
-        approx_distinct_users_sketch_only,
-        approx_percentiles_sketch_only,
-    )
-
-    for fn in (approx_distinct_users_sketch_only, approx_percentiles_sketch_only):
-        df = fn(spark, sf_correctness)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        # formatted explain prints each node twice (tree + details), so
-        # ONE physical scan == exactly 2 occurrences
-        assert plan.count("Scan parquet") == 2, fn.__name__
-        assert "Join" not in plan, fn.__name__
-        assert "Expand" not in plan, fn.__name__
-        assert "partial_" in plan, fn.__name__  # map-side partial sketches
-
-
 def test_ivf_assign_is_partial_maxby_not_window(spark, sf_correctness):
     """r7 verdict #6 (as amended r9): the per-vector best-centroid
     assignment must never be a row_number window over the n x k
@@ -678,29 +653,47 @@ def test_dsir_persists_shared_frames(spark, sf_correctness):
     assert "InMemoryRelation" in tree and "Generate" in tree
 
 
-def test_refined_variants_broadcast_hot_tables_no_cartesian(spark, sf_correctness):
-    """The late-r8 refined scale variants: the hot-bucket membership
-    tables (bounded at 2,048 / 16,384 rows at ANY corpus size) must be
+def test_refined_variants_broadcast_hot_tables_no_cartesian(
+    spark, sf_correctness, monkeypatch
+):
+    """The refined scale paths: the hot-bucket membership tables
+    (bounded at 2,048 / 16,384 rows at ANY corpus size) must be
     BROADCAST into the anti/semi routing joins, and no shape may fall
-    back to a cartesian product."""
+    back to a cartesian product.  The registered LSH query is forced onto
+    its refined branch by planting a max-bucket probe value above
+    LSH_BUCKET_CAP."""
     import contextlib
     import io
+    import os
 
+    from osm2orc_spark.operators import switches
     from osm2orc_spark.operators.dedup import simhash_near_dup_refined
-    from osm2orc_spark.operators.similarity import embedding_near_dup_lsh_refined
+    from osm2orc_spark.operators.similarity import LSH_BUCKET_CAP
 
-    for fn in (embedding_near_dup_lsh_refined, simhash_near_dup_refined):
-        df = fn(spark, sf_correctness)
+    monkeypatch.setitem(
+        switches._PROBE_CACHE,
+        (os.path.abspath(sf_correctness), "lsh_max_bucket"),
+        LSH_BUCKET_CAP + 1,
+    )
+    frames = {
+        "embedding_near_dup_lsh": QUERIES["embedding_near_dup_lsh"].fn(
+            spark, sf_correctness
+        ),
+        "simhash_near_dup_refined": simhash_near_dup_refined(spark, sf_correctness),
+    }
+    for name, df in frames.items():
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
-        assert "CartesianProduct" not in plan, fn.__name__
-        assert "BroadcastHashJoin" in plan, fn.__name__
+        if name == "embedding_near_dup_lsh":
+            assert "cv2" in plan, "LSH refined branch not planned"
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastHashJoin" in plan, name
         # candidate generation must stay a key-equi join (at sf0.01 the
         # planner broadcasts EVERY join side, so the pin is the absence
         # of a non-equi fallback, not a specific shuffle strategy)
-        assert "BroadcastNestedLoopJoin" not in plan, fn.__name__
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_decon_factored_no_window_no_cartesian(spark, sf_correctness, monkeypatch):

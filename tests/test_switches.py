@@ -2,11 +2,13 @@
 their measured scale path automatically, and the switched output is
 identical to the unbounded/banded spelling they replace.
 
-The *algorithms* are proven elsewhere (test_chunked_windows.py,
-test_dedup_invariants.py's refined-identity, the XL sweeps); what THIS
-file proves is the wiring — probe correctness, memoization, and that
-forcing each switch (threshold -> 0 via monkeypatch) end-to-end through
+The chunked *primitives* are proven elsewhere (test_chunked_windows.py,
+the XL sweeps); what THIS file proves is the wiring — probe correctness,
+memoization, and that forcing each switch (threshold -> 0 via
+monkeypatch, or a probe value planted in the cache) end-to-end through
 the REGISTERED entry point reproduces the default-path result exactly.
+The forced branches are the only spelling of each scale path, so these
+are also its identity tests.
 """
 
 from __future__ import annotations
@@ -64,15 +66,31 @@ WINDOW_FAMILY = [
 ]
 
 
-@pytest.mark.parametrize("name", WINDOW_FAMILY)
-def test_window_family_switch_identity(spark, sf_correctness, name, monkeypatch):
-    """Registered query with the switch FORCED (threshold 0) equals the
-    registered query on its default (unbounded-window) path."""
+@pytest.mark.parametrize(
+    "name,all_chunked",
+    [pytest.param(n, False, id=n) for n in WINDOW_FAMILY]
+    + [pytest.param(n, True, id=f"{n}-all_chunked") for n in WINDOW_FAMILY],
+)
+def test_window_family_switch_identity(
+    spark, sf_correctness, name, all_chunked, monkeypatch
+):
+    """Registered query with the switch FORCED equals the registered
+    query on its default (unbounded-window) path.  HOT_KEY_ROWS=0 makes
+    every user hot: the hybrid branch (every key chunked through the
+    isin split); adding HOT_KEY_MAX_LIST=0 overflows the hot list: the
+    all-chunked branch.  The burst ladder then narrows the chunk width
+    below a minute, so every user crosses many stitch seams."""
+    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
     from osm2orc_spark.registry import all_queries
 
     fn = all_queries()[name].fn
     base = fn(spark, sf_correctness)  # default: probe << threshold
     monkeypatch.setattr(switches, "HOT_KEY_ROWS", 0)
+    if all_chunked:
+        monkeypatch.setattr(switches, "HOT_KEY_MAX_LIST", 0)
+    strategy, _ = switches.window_strategy(spark, sf_correctness)
+    assert strategy == ("chunked" if all_chunked else "hybrid")
+    assert switches.burst_chunk_ms(spark, sf_correctness, DEFAULT_CHUNK_MS) < 60_000
     switched = fn(spark, sf_correctness)
     n_base, n_sw = base.count(), switched.count()
     assert n_base > 0
@@ -128,63 +146,27 @@ def test_lsh_switch_identity(spark, sf_correctness, monkeypatch):
         assert base_map[(r.vec_a, r.vec_b)] == r.cosine
 
 
-def test_lsh_auto_path_below_cap_identical(spark, sf_correctness):
-    """At the gate SF no bucket exceeds the cap, so the registered query
-    and the probe-free refined spelling agree exactly (the refined plan
-    degenerates to the registered semantics)."""
-    from osm2orc_spark.operators.similarity import embedding_near_dup_lsh_refined
+def test_lsh_auto_path_below_cap_identical(spark, sf_correctness, monkeypatch):
+    """The refined branch at the REAL cap: plant a max-bucket probe value
+    above LSH_BUCKET_CAP so the registered query plans the adaptive band
+    refinement.  At the gate SF no bucket actually exceeds the cap, so
+    refinement touches no bucket and the output equals the default
+    exactly."""
+    import os
+
+    from osm2orc_spark.operators.similarity import LSH_BUCKET_CAP
     from osm2orc_spark.registry import all_queries
 
-    base = all_queries()["embedding_near_dup_lsh"].fn(spark, sf_correctness)
-    ref = embedding_near_dup_lsh_refined(spark, sf_correctness)
-    assert base.count() == ref.count()
+    fn = all_queries()["embedding_near_dup_lsh"].fn
+    base = fn(spark, sf_correctness)
+    key = (os.path.abspath(sf_correctness), "lsh_max_bucket")
+    assert switches._PROBE_CACHE[key] <= LSH_BUCKET_CAP
+    monkeypatch.setitem(switches._PROBE_CACHE, key, LSH_BUCKET_CAP + 1)
+    ref = fn(spark, sf_correctness)
+    assert "cv2" in ref._jdf.queryExecution().analyzed().toString()
+    assert "cv2" not in base._jdf.queryExecution().analyzed().toString()
+    assert base.count() == ref.count() > 0
     assert base.exceptAll(ref.select(*base.columns)).count() == 0
-
-
-def test_chunked_running_sum_null_semantics(spark):
-    """r8 advice (medium): chunked_running_sum must reproduce the
-    unbounded SUM window's NULL semantics exactly — NULL only while the
-    whole prefix is NULL, prior-chunk values carried across an
-    in-chunk all-NULL prefix."""
-    from pyspark.sql.window import Window as W
-
-    from osm2orc_spark.operators.chunked import chunked_running_sum
-
-    # Construct the adversarial shape: chunk 0 has values, chunk 1's
-    # entire prefix is NULL (rows 3,4), a later value (row 5), and user
-    # 2 is all-NULL everywhere (expects NULL throughout).
-    rows = [
-        (1, 0, 10), (1, 1, None), (1, 2, 5),        # chunk 0 (ms 0..2)
-        (1, 61_000, None), (1, 62_000, None),       # chunk 1: all-NULL prefix
-        (1, 63_000, 7),
-        (2, 0, None), (2, 61_000, None),            # all-NULL user
-    ]
-    df = spark.createDataFrame(
-        [(u, ms, v) for u, ms, v in rows], "user_id int, ms long, v int"
-    ).select(
-        "user_id",
-        F.timestamp_millis("ms").alias("ts"),
-        F.col("ms").alias("event_id"),
-        "v",
-    )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    exp = df.select("user_id", "event_id", F.sum("v").over(w).alias("rs"))
-    got = chunked_running_sum(
-        df, "user_id", "v", "rs", ("ts", "event_id"), 60_000
-    ).select("user_id", "event_id", "rs")
-    assert exp.exceptAll(got).count() == 0
-    assert got.exceptAll(exp).count() == 0
-    # The specific advice scenario: row at ms=61000/62000 (NULL in-chunk
-    # prefix, non-null prior chunks) must carry 15, not NULL.
-    vals = {r.event_id: r.rs for r in got.filter(F.col("user_id") == 1).collect()}
-    assert vals[61_000] == 15 and vals[62_000] == 15 and vals[63_000] == 22
-    assert all(
-        r.rs is None for r in got.filter(F.col("user_id") == 2).collect()
-    )
 
 
 class TestAnnIndexSurface:
